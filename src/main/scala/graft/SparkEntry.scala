@@ -644,57 +644,26 @@ object SparkEntry {
       val f = graft.graph.Algorithms.userSpanningForest(s, d)
       val nNodes = cooc.select(col("src").as("v"))
         .unionAll(cooc.select(col("dst").as("v"))).distinct().count()
-      val nEdges = cooc.count()
-      // graph-side component count, size-adaptive like the forest side:
-      // union-find over collected (src, dst) pairs below 5M edges (the
-      // check is not the operator — `connected_components` exercises
-      // the distributed CC), distributed CC beyond
-      val nComp =
-        if (nEdges <= 5000000L) {
-          val parent = scala.collection.mutable.Map[Long, Long]()
-          // iterative find + path compression (recursion would stack-
-          // overflow on chains near the 5M collect limit)
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-            var c = x
-            while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
-          cooc.select(col("src"), col("dst")).collect().foreach { r =>
-            val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-            if (a != b) parent(a) = b
-          }
-          parent.keys.map(find).toSet.size.toLong
-        } else graft.graph.Algorithms.connectedComponents(cooc)
+      // component counts of both sides, size-adaptive: a driver
+      // union-find over the collected edges under
+      // `graft.driver.localThreshold` edges (the check is not the
+      // operator — `connected_components` exercises the distributed CC),
+      // distributed CC beyond. A spanning TREE is the worst-diameter
+      // graph label propagation can see, so the forest side's
+      // distributed leg runs maxIter=60 (~5 + log2(diameter) rounds)
+      val gate = graft.graph.Algorithms.driverGate(s, 5000000L)
+      def components(edges: DataFrame, nEdges: Long, maxIter: Int): Long = {
+        val e = edges.select(col("src"), col("dst"))
+        if (gate > 0 && nEdges <= gate)
+          graft.graph.UnionFind.componentsLocal(
+              e.collect().map(r => (r.getLong(0), r.getLong(1))))
+            .map(_._2).distinct.length.toLong
+        else graft.graph.Algorithms.connectedComponents(e, maxIter)
           .select(col("component")).distinct().count()
+      }
+      val nComp = components(cooc, cooc.count(), 20)
       val nForestEdges = f.count()
-      // a spanning TREE is the worst-diameter graph label propagation
-      // can see, so the CHECK side counts forest components with a
-      // driver union-find when the forest fits (it is |V|−c rows —
-      // 15 K at sf0.1; the check is not the operator) and falls back to
-      // distributed CC at maxIter=60 (~5 + log2(diameter) rounds) for
-      // forests beyond driver reach
-      val nForestComp =
-        if (nForestEdges <= 5000000L) {
-          val parent = scala.collection.mutable.Map[Long, Long]()
-          // iterative find + path compression (recursion would stack-
-          // overflow on chains near the 5M collect limit)
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-            var c = x
-            while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
-          f.select(col("src"), col("dst")).collect().foreach { r =>
-            val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-            if (a != b) parent(a) = b
-          }
-          parent.keys.map(find).toSet.size.toLong
-        } else graft.graph.Algorithms
-          .connectedComponents(f.select(col("src"), col("dst")), maxIter = 60)
-          .select(col("component")).distinct().count()
+      val nForestComp = components(f, nForestEdges, 60)
       s.createDataFrame(java.util.Arrays.asList(
           org.apache.spark.sql.Row(nNodes, nComp, nForestEdges, nForestComp)),
         org.apache.spark.sql.types.StructType(Seq(

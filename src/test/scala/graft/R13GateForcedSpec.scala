@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *   graft.core.localThreshold=0        (BZ core-decomposition driver leg)
   *   graft.driver.localThreshold=0      (UnionFind CC, driver Tarjan SCC,
   *                                       JP coloring, yens Bellman–Ford,
-  *                                       Borůvka contraction)
+  *                                       Borůvka contraction, the
+  *                                       serving snapshot, the
+  *                                       mst_invariants CC counts)
   *   graft.dedup.clusters.localThreshold=0 (closure UF)
   *   graft.node2vec.adjBroadcastEdges=0 (CSR/adjacency broadcast draw)
   *   graft.dbscan.exactPointsThreshold=0 (LSH-banded eps pairs)
@@ -39,7 +41,8 @@ class R13GateForcedSpec extends AnyFunSuite {
     "dedup_clusters", "dbscan_clusters", "node2vec_walks",
     "communities_sllpa", "triangle_count", "truss_decay",
     "pagerank_topk", "fastrp_embeddings", "dedup_minhash_pairs",
-    "bfs_hops", "communities_louvain", "communities_leiden")
+    "bfs_hops", "communities_louvain", "communities_leiden",
+    "serve_user_books", "serve_recommendations", "mst_invariants")
 
   private def runAll(confs: Seq[(String, String)]): Map[String, Seq[String]] = {
     val s = spark.newSession()

@@ -55,9 +55,30 @@ class ScaleToolsSpec extends AnyFunSuite {
     assert(generous.exceptAll(full).isEmpty && full.exceptAll(generous).isEmpty)
   }
 
+  /** A session with every driver-leg gate forced to the at-scale
+    * shape: serving lookups take the bucketed leg. The serving tables
+    * are built on the default session first, so the forced one caches
+    * nothing of its own (`Cache.clear` on it would unpersist the
+    * default session's identical plans). */
+  private def gateForcedSession(): org.apache.spark.sql.SparkSession = {
+    graft.recommend.Serving.userBooksTable(spark, sf)
+    graft.recommend.Serving.recommendationsTable(spark, sf)
+    val forced = spark.newSession()
+    forced.conf.set("graft.driver.localThreshold", "0")
+    forced
+  }
+
+  /** The first `n` users with ratings, by id. */
+  private def sampleUsers(n: Int): Seq[Long] =
+    graph.RatingsGraph.ratings(spark, sf)
+      .select("user_id").distinct().orderBy("user_id").limit(n)
+      .collect().map(_.getLong(0)).toSeq
+
+  // the bucketed (at-scale) leg, taken here by forcing the driver gate
   test("serving lookups: one bucket read, zero Exchange, ≡ the online per-user queries") {
     import graft.recommend.{Recommend, Serving}
-    val books = Serving.userBooksLookup(spark, sf)
+    val forced = gateForcedSession()
+    val books = Serving.userBooksLookup(forced, sf)
     val plan = books.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"serving lookup shuffles:\n$plan")
     assert(plan.contains("SelectedBucketsCount: 1 out of"),
@@ -70,22 +91,114 @@ class ScaleToolsSpec extends AnyFunSuite {
     assert(nonEmpty <= 1, s"lookup rows spread over $nonEmpty partitions")
     // the precomputed silver answers EXACTLY like the online queries —
     // for the fixture user and a sample of others (order-sensitive)
-    val sample = graft.graph.RatingsGraph.ratings(spark, sf)
-      .select("user_id").distinct().orderBy("user_id").limit(3)
-      .collect().map(_.getLong(0)).toSeq
-    sample.foreach { u =>
-      assert(Serving.userBooksLookup(spark, sf, u).collect().toSeq ==
+    sampleUsers(3).foreach { u =>
+      assert(Serving.userBooksLookup(forced, sf, u).collect().toSeq ==
         Recommend.userRatedBooks(spark, sf, u).collect().toSeq,
         s"user $u: serving books != online query")
-      assert(Serving.recommendationsLookup(spark, sf, u).collect().toSeq ==
+      assert(Serving.recommendationsLookup(forced, sf, u).collect().toSeq ==
         Recommend.recommendKnn(spark, sf, u).collect().toSeq,
         s"user $u: serving recommendations != online query")
     }
-    val rplan = Serving.recommendationsLookup(spark, sf)
+    val rplan = Serving.recommendationsLookup(forced, sf)
       .queryExecution.executedPlan.toString
     assert(!rplan.contains("Exchange") &&
       rplan.contains("SelectedBucketsCount: 1 out of"),
       s"recommendation lookup plan not serving-shaped:\n$rplan")
+  }
+
+  test("serving lookups, snapshot leg: zero Spark jobs, ≡ the online per-user queries, empty user keeps the schema") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.recommend.{Recommend, Serving}
+    val users = sampleUsers(5)
+    // first lookups build the snapshots; the probe below times warm ones
+    users.foreach { u =>
+      Serving.userBooksLookup(spark, sf, u).collect()
+      Serving.recommendationsLookup(spark, sf, u).collect()
+    }
+    val jobs = new AtomicInteger()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
+          marker.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val got = users.map(u => (Serving.userBooksLookup(spark, sf, u).collect().toSeq,
+        Serving.recommendationsLookup(spark, sf, u).collect().toSeq))
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every job the lookups could have started has been counted
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      assert(jobs.get == 0, s"warm lookups ran ${jobs.get} Spark jobs")
+      users.zip(got).foreach { case (u, (books, recs)) =>
+        assert(books == Recommend.userRatedBooks(spark, sf, u).collect().toSeq,
+          s"user $u: snapshot books != online query")
+        assert(recs == Recommend.recommendKnn(spark, sf, u).collect().toSeq,
+          s"user $u: snapshot recommendations != online query")
+      }
+    } finally sc.removeSparkListener(listener)
+    // a user with no ratings: no rows, and exactly the bucketed leg's
+    // schema (names, types, nullability)
+    val (noUser, forced) = (-1L, gateForcedSession())
+    Seq[(org.apache.spark.sql.SparkSession, Long) => org.apache.spark.sql.DataFrame](
+      Serving.userBooksLookup(_, sf, _), Serving.recommendationsLookup(_, sf, _)
+    ).foreach { lookup =>
+      val empty = lookup(spark, noUser)
+      assert(empty.collect().isEmpty)
+      assert(empty.schema == lookup(forced, noUser).schema)
+      assert(empty.schema == lookup(spark, users.head).schema)
+    }
+  }
+
+  test("serving snapshot: a dropped and rebuilt table is served fresh") {
+    import graft.recommend.Serving
+    val u = sampleUsers(1).head
+    val before = Serving.userBooksLookup(spark, sf, u).collect().toSeq
+    val t = Serving.userBooksTable(spark, sf)
+    spark.sql(s"DROP TABLE $t")
+    try {
+      Serving.userBooksPayload(graph.RatingsGraph.ratings(spark, sf),
+          graph.RatingsGraph.ratedBooks(spark, sf))
+        .withColumn("title", concat(lit("rebuilt "), col("title")))
+        .write.bucketBy(8, "user_id").sortBy("user_id")
+        .format("parquet").mode("overwrite").saveAsTable(t)
+      val after = Serving.userBooksLookup(spark, sf, u).collect().toSeq
+      assert(after == before.map(r =>
+        org.apache.spark.sql.Row(r.get(0), "rebuilt " + r.getString(1), r.get(2))),
+        "lookup served the dropped table's snapshot")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t") // the next lookup rebuilds it
+  }
+
+  test("serving snapshot: application-end eviction drops it; concurrent first lookups build it once") {
+    import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
+    import graft.recommend.Serving
+    val u = sampleUsers(1).head
+    Serving.userBooksLookup(spark, sf, u).collect()
+    val built = Serving.snapshotBuilds.get
+    Serving.userBooksLookup(spark, sf, u).collect()
+    assert(Serving.snapshotBuilds.get == built, "a warm lookup rebuilt the snapshot")
+    Serving.evictContext(spark.sparkContext) // what onApplicationEnd runs
+    val threads = 8
+    val barrier = new CyclicBarrier(threads)
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      val futures = (1 to threads).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+        def call(): Seq[String] = {
+          barrier.await()
+          Serving.userBooksLookup(spark, sf, u).collect().map(_.toString).toSeq
+        }
+      }))
+      val rows = futures.map(_.get(300, TimeUnit.SECONDS))
+      assert(Serving.snapshotBuilds.get == built + 1,
+        s"${Serving.snapshotBuilds.get - built} builds after eviction, expected exactly 1")
+      assert(rows.distinct.size == 1 && rows.head.nonEmpty, "threads saw different rows")
+    } finally pool.shutdownNow(): Unit
   }
 
   test("coRatedPairStats maxFanout: capped pairs subset, generous cap exact, stats sufficient") {
