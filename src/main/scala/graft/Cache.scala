@@ -125,13 +125,20 @@ object Cache {
     * application ends. */
   def clear(spark: org.apache.spark.sql.SparkSession): Unit = {
     val prefix = s"${sessionId(spark)}|"
+    val removed = scala.collection.mutable.ListBuffer[DataFrame]()
     val it = store.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getKey.startsWith(prefix)) {
-        try e.getValue.unpersist(blocking = false) catch { case _: Throwable => () }
-        it.remove()
-      }
+      if (e.getKey.startsWith(prefix)) { removed += e.getValue; it.remove() }
+    }
+    // Spark caches by plan, not by session: an identical frame another
+    // live session still holds shares the cache entry, so it stays
+    val kept = store.values().toArray(Array.empty[DataFrame])
+      .map(_.queryExecution.analyzed)
+    removed.foreach { df =>
+      val plan = df.queryExecution.analyzed
+      if (!kept.exists(_.sameResult(plan)))
+        try df.unpersist(blocking = false) catch { case _: Throwable => () }
     }
     evictSideMaps(prefix)
   }

@@ -1442,8 +1442,9 @@ object SparkEntry {
       .filter(col("sc") === col("dc")).select(col("src"), col("dst"))
       .localCheckpoint()
     val spark = labels.sparkSession
+    val gate = graft.graph.Algorithms.driverGate(spark, 5000000L)
     val comp =
-      if (intra.count() <= 5000000L) {
+      if (gate > 0 && intra.count() <= gate) {
         val es = intra.collect().map(r => (r.getLong(0), r.getLong(1)))
         import spark.implicits._
         graft.graph.UnionFind.componentsLocal(es).toSeq.toDF("node_id", "component")

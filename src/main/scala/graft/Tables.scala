@@ -65,4 +65,9 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+  /** The (vec_id, embedding) columns of `embeddings` read with their
+    * generated types (BIGINT, FLOAT[]). A given schema skips the Spark
+    * job a plain read runs to infer it from the parquet footer. */
+  def embeddingVectors(s: SparkSession, d: String): DataFrame =
+    s.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>").parquet(s"$d/embeddings.parquet")
 }

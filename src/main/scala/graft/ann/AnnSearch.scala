@@ -1,17 +1,38 @@
 package graft.ann
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.VectorOps
+import graft.functions.VectorOps.round6
+import graft.graph.Algorithms
 import graft.plans.CosineSim
 
 /** Similarity search over the `embeddings` table: brute-force cosine
   * top-k (exact baseline), LSH-bucketed approximate top-k, and an
   * IVF-style centroid-routed variant (the 100 TB scale path — probe a
   * few cells instead of the whole corpus).
+  *
+  * The IVF and PQ index is size-adaptive. While the corpus holds at most
+  * `Algorithms.driverGate` (`graft.driver.localThreshold`, default 5 M)
+  * vector scalars (rows × [[Dim]]), one bounded collect loads it and the
+  * index is built on the driver, replaying the distributed recipe step
+  * for step ([[LocalIndex]]): [[ivfPqTopK]] answers there with no Spark
+  * job, and [[ivfAssignment]], [[ivfProbeCells]], [[pqCodes]] and the
+  * centroid/codebook frames are `LocalRelation`s of that index with the
+  * distributed frames' schemas. Over the gate, or with the gate at 0, the
+  * distributed builders run.
   */
 object AnnSearch {
 
@@ -249,9 +270,10 @@ object AnnSearch {
     * struct, never compared — code is unique per group), refined
     * centroids 1e-6-snapped. See [[ivfCentroids]] for the rationale of
     * each snap. */
-  private def pqCodebooks(spark: SparkSession, dir: String,
-      m: Int, ksub: Int): DataFrame =
-    graft.Cache.cached(spark, dir, s"pq_codebooks_${m}_$ksub") {
+  private[graft] def pqCodebooks(spark: SparkSession, dir: String,
+      m: Int, ksub: Int): DataFrame = localIndex(spark, dir) match {
+    case Some(ix) => ix.pqCodebooksFrame(spark, m, ksub)
+    case None => graft.Cache.cached(spark, dir, s"pq_codebooks_${m}_$ksub") {
       val subDim = Dim / m
       val sub = emb(spark, dir).select(col("vec_id"),
           posexplode(array((0 until m).map(s =>
@@ -277,6 +299,7 @@ object AnnSearch {
         .select(col("sub"), col("code"),
           transform(col("csum"), v => round(v / col("n"), 6)).as("centroid"))
     }
+  }
 
   /** PQ codes: every vector × subspace encoded to its nearest-centroid
     * id — the 1-byte-per-subspace compressed representation ADC scans
@@ -284,8 +307,9 @@ object AnnSearch {
     * Session-cached; at scale a (vec_id, codes) table. Same replayable
     * struct-min argmin as the codebook training. */
   def pqCodes(spark: SparkSession, dir: String,
-      m: Int = 8, ksub: Int = 16): DataFrame =
-    graft.Cache.cached(spark, dir, s"pq_codes_${m}_$ksub") {
+      m: Int = 8, ksub: Int = 16): DataFrame = localIndex(spark, dir) match {
+    case Some(ix) => ix.pqCodesFrame(spark, m, ksub)
+    case None => graft.Cache.cached(spark, dir, s"pq_codes_${m}_$ksub") {
       val subDim = Dim / m
       val cb = pqCodebooks(spark, dir, m, ksub)
       emb(spark, dir).select(col("vec_id"),
@@ -298,6 +322,7 @@ object AnnSearch {
         .agg(min(struct(col("d"), col("code"))).as("best"))
         .select(col("vec_id"), col("sub"), col("best.code").as("code"))
     }
+  }
 
   /** PQ approximate top-k via asymmetric distance computation (ADC):
     * the query builds an m×ksub distance table driver-side (m·ksub
@@ -376,8 +401,10 @@ object AnnSearch {
     *    (~1e-12 noise) and the snap makes the centroid bit-replayable;
     *    NO unit-normalize — cosine is scale-invariant, so the
     *    normalize bought nothing but more float ops to replicate. */
-  private def ivfCentroids(spark: SparkSession, dir: String, nCells: Int): DataFrame =
-    graft.Cache.cached(spark, dir, s"ivf_centroids_$nCells") {
+  private[graft] def ivfCentroids(spark: SparkSession, dir: String,
+      nCells: Int): DataFrame = localIndex(spark, dir) match {
+    case Some(ix) => ix.ivfCentroidsFrame(spark, nCells)
+    case None => graft.Cache.cached(spark, dir, s"ivf_centroids_$nCells") {
       import spark.implicits._
       val vectors = emb(spark, dir)
       val seedRows = vectors
@@ -405,13 +432,16 @@ object AnnSearch {
         .select(col("cell"),
           transform(col("csum"), v => round(v / col("n"), 6)).as("centroid"))
     }
+  }
 
   /** Cell assignment of every vector, session-cached (the IVF posting
     * lists — at scale a table partitioned by cell). Same replayable
     * argmax recipe as the seed assignment (rounded cosine, struct-max,
     * ties to the lowest cell). */
-  def ivfAssignment(spark: SparkSession, dir: String, nCells: Int = 16): DataFrame =
-    graft.Cache.cached(spark, dir, s"ivf_assignment_$nCells") {
+  def ivfAssignment(spark: SparkSession, dir: String,
+      nCells: Int = 16): DataFrame = localIndex(spark, dir) match {
+    case Some(ix) => ix.ivfAssignmentFrame(spark, nCells)
+    case None => graft.Cache.cached(spark, dir, s"ivf_assignment_$nCells") {
       emb(spark, dir).crossJoin(broadcast(ivfCentroids(spark, dir, nCells)))
         .withColumn("cos",
           round(CosineSim.cosine(spark, col("embedding"), col("centroid")), 6))
@@ -421,6 +451,7 @@ object AnnSearch {
         .select(col("vec_id"), col("best.cell").as("cell"),
           col("best.emb").as("embedding"))
     }
+  }
 
   /** IVF-style approximate search: deterministic seed centroids (one
     * Lloyd refinement), vectors assigned to nearest centroid, the query
@@ -459,14 +490,16 @@ object AnnSearch {
     * results never leave the routed cells. One-column (cell) frame. */
   def ivfProbeCells(spark: SparkSession, dir: String,
       queryId: Long = DefaultQueryId, nCells: Int = 16,
-      nProbe: Int = 4): DataFrame = {
-    val qVec = emb(spark, dir).filter(col("vec_id") === queryId)
-      .select(col("embedding").as("query_vec"))
-    ivfCentroids(spark, dir, nCells).crossJoin(broadcast(qVec))
-      .withColumn("cos",
-        round(CosineSim.cosine(spark, col("centroid"), col("query_vec")), 6))
-      .orderBy(col("cos").desc, col("cell")).limit(nProbe)
-      .select(col("cell"))
+      nProbe: Int = 4): DataFrame = localIndex(spark, dir) match {
+    case Some(ix) => ix.probeCellsFrame(spark, queryId, nCells, nProbe)
+    case None =>
+      val qVec = emb(spark, dir).filter(col("vec_id") === queryId)
+        .select(col("embedding").as("query_vec"))
+      ivfCentroids(spark, dir, nCells).crossJoin(broadcast(qVec))
+        .withColumn("cos",
+          round(CosineSim.cosine(spark, col("centroid"), col("query_vec")), 6))
+        .orderBy(col("cos").desc, col("cell")).limit(nProbe)
+        .select(col("cell"))
   }
 
   /** The full production ANN stack in one operator — IVF route → PQ ADC
@@ -483,7 +516,9 @@ object AnnSearch {
     *      fetch their raw vectors for exact cosine — the sole stage that
     *      reads full embeddings, bounded at k·candMult rows.
     *
-    * Reuses the session-cached IVF index ([[ivfAssignment]]) and PQ
+    * Under the driver gate all three stages run on the driver over the
+    * [[LocalIndex]] (no Spark job once the index is built). Over it, this
+    * reuses the session-cached IVF index ([[ivfAssignment]]) and PQ
     * codebooks/codes ([[pqCodes]]) — at scale both are persisted index
     * tables built once per corpus version. Output (vec_id, cosine) —
     * same contract as [[bruteForceTopK]], recall-gated against it by the
@@ -491,7 +526,17 @@ object AnnSearch {
   def ivfPqTopK(spark: SparkSession, dir: String,
       queryId: Long = DefaultQueryId, k: Int = 10,
       nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 8, ksub: Int = 16, candMult: Int = 8): DataFrame = {
+      m: Int = 8, ksub: Int = 16, candMult: Int = 8): DataFrame =
+    localIndex(spark, dir) match {
+      case Some(ix) =>
+        ix.ivfPqTopK(spark, queryId, k, nCells, nProbe, m, ksub, candMult)
+      case None => ivfPqTopKDistributed(spark, dir, queryId, k, nCells, nProbe,
+        m, ksub, candMult)
+    }
+
+  private def ivfPqTopKDistributed(spark: SparkSession, dir: String,
+      queryId: Long, k: Int, nCells: Int, nProbe: Int,
+      m: Int, ksub: Int, candMult: Int): DataFrame = {
     val qRows = emb(spark, dir).filter(col("vec_id") === queryId).collect()
     if (qRows.isEmpty)
       return emb(spark, dir).limit(0)
@@ -524,5 +569,257 @@ object AnnSearch {
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
+  }
+
+  // — driver leg: the IVF/PQ index on the driver, under the shared gate —
+
+  /** The embeddings of one (session, dir, gate), loaded once: the holder's
+    * lazy val is the single flight, and a failed load is retried by the
+    * next call. Registered with the cache, so `Cache.clear` and the
+    * application-end listener evict it. */
+  private final class IndexHolder(load: => Option[LocalIndex]) {
+    lazy val index: Option[LocalIndex] = load
+  }
+
+  private val indexes = {
+    val m = new ConcurrentHashMap[String, IndexHolder]()
+    graft.Cache.registerSideMap(m)
+    m
+  }
+
+  /** The driver-side index, or None for the distributed leg: the gate is
+    * at 0, the corpus holds more than `driverGate` vector scalars, or it
+    * is ill-formed (see [[LocalIndex.load]]). */
+  private[graft] def localIndex(spark: SparkSession, dir: String): Option[LocalIndex] = {
+    val gate = Algorithms.driverGate(spark, 5000000L)
+    if (gate <= 0) None
+    else indexes.computeIfAbsent(s"${graft.Cache.sessionId(spark)}|$dir|$gate",
+      _ => new IndexHolder(LocalIndex.load(Tables.embeddingVectors(spark, dir), gate))).index
+  }
+
+  private object LocalIndex {
+    /** One bounded collect both chooses the leg and loads the vectors: at
+      * most gate / Dim + 1 rows come back, and more than gate / Dim is over
+      * the gate. Ill-formed input (a null id or vector, a vector that is
+      * not Dim non-null floats, a repeated id) also goes distributed,
+      * whose builders define what it yields; so does a table the declared
+      * types cannot read, where the distributed leg reports any real
+      * error. */
+    def load(vectors: => DataFrame, gate: Long): Option[LocalIndex] = {
+      val cap = gate / Dim
+      val rows = try vectors.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+        catch { case scala.util.control.NonFatal(_) => return None }
+      def wellFormed(r: org.apache.spark.sql.Row) =
+        !r.isNullAt(0) && !r.isNullAt(1) && {
+          val e = r.getSeq[Any](1)
+          e.length == Dim && !e.contains(null)
+        }
+      if (rows.length > cap || !rows.forall(wellFormed)) None
+      else {
+        val ids = rows.map(_.getLong(0))
+        if (ids.distinct.length != ids.length) None
+        else Some(new LocalIndex(ids,
+          rows.map(_.getSeq[Float](1).iterator.map(_.toDouble).toArray)))
+      }
+    }
+  }
+
+  /** IVF part: the kept cells ascending, their refined centroids, and
+    * each vector's index into them (-1: there are no cells). */
+  private final class LocalIvf(val cells: Array[Int],
+      val centroids: Array[Array[Double]], val cellOf: Array[Int])
+
+  /** PQ part, per subspace: the kept codes ascending, their codebook
+    * centroids, and each vector's index into them (-1: no codes). */
+  private final class LocalPq(val subDim: Int, val codes: Array[Array[Int]],
+      val books: Array[Array[Array[Double]]], val codeOf: Array[Array[Int]])
+
+  /** The IVF and PQ index over driver-resident vectors (`vecs`: the
+    * float embeddings widened to double, which is exact). Each part is
+    * built once per parameter set and replays the distributed builders
+    * step for step: seeds by md5 hex order (ties by vec_id), one Lloyd
+    * step on the 1e-6-rounded score (cosine argmax for IVF, squared-L2
+    * argmin for PQ, ties to the lowest cell or code), centroids snapped
+    * to 1e-6, members-less cells and codes dropped. The cross-row mean
+    * sums in another order than Spark's partial aggregates; the snap
+    * absorbs that noise, as it does between two distributed runs. */
+  private[graft] final class LocalIndex(ids: Array[Long], vecs: Array[Array[Double]]) {
+    private val pos: Map[Long, Int] = ids.iterator.zipWithIndex.toMap
+    private val ivfParts = new ConcurrentHashMap[Int, LocalIvf]()
+    private val pqParts = new ConcurrentHashMap[(Int, Int), LocalPq]()
+
+    private def ivf(nCells: Int): LocalIvf = ivfParts.computeIfAbsent(nCells, _ => {
+      val seeds = seedOrder(ids, _.toString).take(nCells).map(vecs)
+      val cos = (v: Array[Double], c: Array[Double]) => round6(CosineSim.local(v, c))
+      val (cells, cents) = lloydStep(vecs, 0, Dim, seeds, maximize = true, cos)
+      new LocalIvf(cells, cents,
+        vecs.map(v => argBest(cents.length, maximize = true)(j => cos(v, cents(j)))))
+    })
+
+    private def pq(m: Int, ksub: Int): LocalPq = pqParts.computeIfAbsent((m, ksub), _ => {
+      val subDim = Dim / m
+      val parts = Array.tabulate(m) { s =>
+        val off = s * subDim
+        val seeds = seedOrder(ids, id => s"$id:$s").take(ksub)
+          .map(v => vecs(v).slice(off, off + subDim))
+        val l2 = (v: Array[Double], c: Array[Double]) => round6(l2sqAt(v, off, c))
+        val (codes, book) = lloydStep(vecs, off, subDim, seeds, maximize = false, l2)
+        (codes, book, vecs.map(v => argBest(book.length, maximize = false)(j => l2(v, book(j)))))
+      }
+      new LocalPq(subDim, parts.map(_._1), parts.map(_._2), parts.map(_._3))
+    })
+
+    /** The query's `nProbe` cells: rounded cosine to each centroid,
+      * descending, ties to the lowest cell. */
+    private def probe(iv: LocalIvf, q: Array[Double], nProbe: Int): Seq[Int] = {
+      val cos = iv.centroids.map(c => round6(CosineSim.local(c, q)))
+      iv.cells.indices.sortWith { (a, b) =>
+        val c = sparkCompare(cos(a), cos(b))
+        if (c != 0) c > 0 else a < b
+      }.take(nProbe).map(iv.cells)
+    }
+
+    def ivfCentroidsFrame(spark: SparkSession, nCells: Int): DataFrame = {
+      val iv = ivf(nCells)
+      frame(spark, IvfCentroidsSchema, iv.cells.indices.map(j =>
+        InternalRow(iv.cells(j), ArrayData.toArrayData(iv.centroids(j)))))
+    }
+
+    def ivfAssignmentFrame(spark: SparkSession, nCells: Int): DataFrame = {
+      val iv = ivf(nCells)
+      frame(spark, IvfAssignmentSchema, vecs.indices.filter(iv.cellOf(_) >= 0).map(v =>
+        InternalRow(ids(v), iv.cells(iv.cellOf(v)),
+          ArrayData.toArrayData(vecs(v).map(_.toFloat)))))
+    }
+
+    def probeCellsFrame(spark: SparkSession, queryId: Long, nCells: Int,
+        nProbe: Int): DataFrame =
+      frame(spark, ProbeCellsSchema, pos.get(queryId).toSeq
+        .flatMap(q => probe(ivf(nCells), vecs(q), nProbe)).map(InternalRow(_)))
+
+    def pqCodebooksFrame(spark: SparkSession, m: Int, ksub: Int): DataFrame = {
+      val p = pq(m, ksub)
+      frame(spark, PqCodebooksSchema,
+        for (s <- 0 until m; j <- p.codes(s).indices)
+          yield InternalRow(s, p.codes(s)(j), ArrayData.toArrayData(p.books(s)(j))))
+    }
+
+    def pqCodesFrame(spark: SparkSession, m: Int, ksub: Int): DataFrame = {
+      val p = pq(m, ksub)
+      frame(spark, PqCodesSchema,
+        for (v <- vecs.indices; s <- 0 until m if p.codeOf(s)(v) >= 0)
+          yield InternalRow(ids(v), s, p.codes(s)(p.codeOf(s)(v))))
+    }
+
+    /** [[AnnSearch.ivfPqTopK]] on the driver: route, ADC scan (the sum
+      * rounded before the k·candMult cut), exact re-rank. */
+    def ivfPqTopK(spark: SparkSession, queryId: Long, k: Int, nCells: Int,
+        nProbe: Int, m: Int, ksub: Int, candMult: Int): DataFrame =
+      pos.get(queryId) match {
+        case None => frame(spark, NoQuerySchema, Nil)
+        case Some(qi) =>
+          val q = vecs(qi)
+          val iv = ivf(nCells)
+          val routed = probe(iv, q, nProbe).toSet
+          val p = pq(m, ksub)
+          val table = Array.tabulate(m)(s => p.books(s).map(c => l2sqAt(q, s * p.subDim, c)))
+          val adc = (v: Int) => round6((0 until m).map(s => table(s)(p.codeOf(s)(v))).sum)
+          val candidates = vecs.indices.filter(v => ids(v) != queryId &&
+              iv.cellOf(v) >= 0 && routed(iv.cells(iv.cellOf(v))) &&
+              (0 until m).forall(p.codeOf(_)(v) >= 0))
+            .map(v => (v, adc(v)))
+            .sortWith { case ((a, da), (b, db)) =>
+              val c = sparkCompare(da, db)
+              if (c != 0) c < 0 else ids(a) < ids(b)
+            }.take(k * candMult)
+          val top = candidates.map { case (v, _) => (v, CosineSim.local(vecs(v), q)) }
+            .sortWith { case ((a, ca), (b, cb)) =>
+              val c = sparkCompare(ca, cb)
+              if (c != 0) c > 0 else ids(a) < ids(b)
+            }.take(k)
+          frame(spark, TopKSchema, top.map { case (v, c) => InternalRow(ids(v), round6(c)) })
+      }
+  }
+
+  private val IvfCentroidsSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType))))
+  private val IvfAssignmentSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("cell", IntegerType), StructField("embedding", ArrayType(FloatType))))
+  private val ProbeCellsSchema = StructType(Seq(StructField("cell", IntegerType)))
+  private val PqCodebooksSchema = StructType(Seq(
+    StructField("sub", IntegerType, nullable = false), StructField("code", IntegerType),
+    StructField("centroid", ArrayType(DoubleType))))
+  private val PqCodesSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("sub", IntegerType, nullable = false), StructField("code", IntegerType)))
+  private val TopKSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cosine", DoubleType)))
+  /** The unknown-query frame of the distributed top-k operators. */
+  private val NoQuerySchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cosine", DoubleType, nullable = false)))
+
+  private def frame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Spark's order on doubles: NaN above everything, -0.0 equal to 0.0. */
+  private def sparkCompare(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** Squared L2 from `v[off, off + c.length)` to `c`: the sequential fold
+    * of [[l2sq]]. */
+  private def l2sqAt(v: Array[Double], off: Int, c: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < c.length) { val d = v(off + i) - c(i); acc += d * d; i += 1 }
+    acc
+  }
+
+  /** The best of `n` candidates by `score` (highest or lowest in Spark's
+    * double order), ties to the lowest index: the struct-max/min argbest
+    * of the distributed builders. -1 when there are none. */
+  private def argBest(n: Int, maximize: Boolean)(score: Int => Double): Int = {
+    var best = -1
+    var bs = 0.0
+    var j = 0
+    while (j < n) {
+      val s = score(j)
+      if (best < 0 || { val c = sparkCompare(s, bs); if (maximize) c > 0 else c < 0 }) {
+        best = j; bs = s
+      }
+      j += 1
+    }
+    best
+  }
+
+  /** Vector indices by (md5 hex of `key(vec_id)`, vec_id): the seed order
+    * of the distributed builders. The digests are computed once up front,
+    * not inside the comparator. */
+  private def seedOrder(ids: Array[Long], key: Long => String): Array[Int] = {
+    val h = ids.map(id => DigestUtils.md5Hex(key(id)))
+    Array.range(0, ids.length).sortWith { (a, b) =>
+      val c = h(a).compareTo(h(b))
+      if (c != 0) c < 0 else ids(a) < ids(b)
+    }
+  }
+
+  /** One Lloyd step from `seeds` over the `dim` coordinates of every
+    * vector at `off`: each vector joins its best seed by `score`, each
+    * seed with members becomes their per-dimension mean snapped to 1e-6,
+    * and seeds without members drop out. Returns the kept seed indices
+    * and their centroids. */
+  private def lloydStep(vecs: Array[Array[Double]], off: Int, dim: Int,
+      seeds: Array[Array[Double]], maximize: Boolean,
+      score: (Array[Double], Array[Double]) => Double): (Array[Int], Array[Array[Double]]) = {
+    val sums = Array.ofDim[Double](seeds.length, dim)
+    val members = new Array[Long](seeds.length)
+    vecs.foreach { v =>
+      val j = argBest(seeds.length, maximize)(c => score(v, seeds(c)))
+      if (j >= 0) {
+        members(j) += 1
+        var i = 0
+        while (i < dim) { sums(j)(i) += v(off + i); i += 1 }
+      }
+    }
+    val kept = seeds.indices.filter(members(_) > 0).toArray
+    (kept, kept.map(j => sums(j).map(x => round6(x / members(j)))))
   }
 }

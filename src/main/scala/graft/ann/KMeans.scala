@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.functions.VectorOps.round6
 
 /** Lloyd's k-means over the embedding corpus (GDS `gds.kmeans` parity;
   * the clustering complement of the IVF routing stage in
@@ -22,11 +23,6 @@ import graft.Tables._
   * iteration is ONE shuffle of k×64 partial rows, never a vector
   * exchange. The corpus is scanned once per iteration. */
 object KMeans {
-
-  /** Decimal-6 snap, HALF_UP — matches both engines' ROUND at the
-    * noise scale involved (see the centroid-update comment). */
-  private def snap6(v: Double): Double =
-    BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Per-iteration WSS trace of the cached [[assign]] build, memoized
     * alongside the frame (the Cache holds DataFrames only); written
@@ -99,7 +95,7 @@ object KMeans {
             // order (~1e-12 reduction noise), and snapped centroids
             // make every later assignment bit-replayable in the DuckDB
             // oracle — the IVF/PQ precedent ([[AnnSearch.ivfCentroids]])
-            Array.tabulate(dim)(i => snap6(r.getDouble(2 + i) / n))
+            Array.tabulate(dim)(i => round6(r.getDouble(2 + i) / n))
           case None => centroids(c) // empty cluster keeps its centroid
         }
       }.toArray
@@ -136,7 +132,7 @@ object KMeans {
       .collect()
       .map { r =>
         val n = r.getLong(1).toDouble
-        r.getInt(0) -> Array.tabulate(dim)(i => snap6(r.getDouble(2 + i) / n))
+        r.getInt(0) -> Array.tabulate(dim)(i => round6(r.getDouble(2 + i) / n))
       }.toMap
     // r12: one native kernel call per row ([[graft.plans
     // .CentroidSilhouette]]) instead of k inlined 64-term sqrt chains —

@@ -11,6 +11,14 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
+  /** Driver-side twin of Spark's `round(x, 6)` on a double: HALF_UP over
+    * the shortest decimal repr, NaN and ±Infinity passed through. The
+    * 1e-6 snap that makes cross-row float means replayable (k-means
+    * centroids, the IVF/PQ index). */
+  def round6(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** Dot product of two equal-length numeric arrays, accumulated in
     * double, sequential fold (deterministic per row). */
   def dot(a: Column, b: Column): Column =

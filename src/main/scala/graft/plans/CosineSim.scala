@@ -120,6 +120,21 @@ object CosineSim {
     register(spark)
     call_function(FunctionName, a, b)
   }
+
+  /** The kernel on the driver, bit-identical to [[CosineSim.nullSafeEval]]
+    * for equal-length inputs (float elements widen exactly to double):
+    * the same sequential accumulation, 0.0 for a zero norm. */
+  def local(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < a.length) {
+      val x = a(i); val y = b(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom > 0.0) dot / denom else 0.0
+  }
 }
 
 /** SparkSessionExtensions hook: `.withExtensions(new GraftExtensions)`

@@ -12,6 +12,32 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sf = "/root/testdata/sf0.001"
+
+  /** `body`'s value and the Spark jobs it started, counted once a marker
+    * job reaches the listener: the listener bus is FIFO, so by then
+    * every job `body` could have started has been seen. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new AtomicInteger()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
+          marker.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 class CoreSuiteSpec extends AnyFunSuite {

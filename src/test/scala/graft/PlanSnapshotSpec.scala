@@ -121,12 +121,8 @@ class PlanSnapshotSpec extends AnyFunSuite {
     ("events_approx_overlap", 10, 4),
     ("semdedup_pairs", 8, 3),
     ("semdedup_survivors", 9, 3),
-    // r6: the composed IVFPQ stack — the count includes the session-
-    // cached IVF/PQ index builds' materialized stage lines (the
-    // viz_payload precedent); the PROBE itself is route-semi-join +
-    // ADC aggregate + k·candMult re-rank. multimodal_decode_real is
-    // one scan + one mapPartitions + the output sort
-    ("ann_ivfpq_topk", 27, 8),
+    // multimodal_decode_real is one scan + one mapPartitions + the
+    // output sort
     ("multimodal_decode_real", 1, 1),
     // r6 continuation: the size-adaptive embedding near-dup (spread
     // repartition + broadcast NL join + output sort — NO shuffled pair
@@ -286,8 +282,25 @@ class PlanSnapshotSpec extends AnyFunSuite {
     assert(ex <= 7, s"triangleCount grew a shuffle: $ex Exchanges\n$plan")
   }
 
-  pins.foreach { case (name, maxExchanges, maxScans) =>
+  // Pins of entries whose default gate answers on the driver (a
+  // LocalRelation plan: 0/0, so any pin would pass vacuously): they
+  // guard the distributed leg, on a session with the driver gate at 0.
+  // r6: the composed IVFPQ stack — the count includes the session-
+  // cached IVF/PQ index builds' materialized stage lines (the
+  // viz_payload precedent); the PROBE itself is route-semi-join + ADC
+  // aggregate + k·candMult re-rank.
+  private val forcedPins = Seq(("ann_ivfpq_topk", 27, 8))
+
+  private lazy val gateForced = {
+    val s = spark.newSession()
+    s.conf.set("graft.driver.localThreshold", "0")
+    s
+  }
+
+  (pins.map((_, () => spark)) ++ forcedPins.map((_, () => gateForced))).foreach {
+      case ((name, maxExchanges, maxScans), session) =>
     test(s"$name plans ≤ $maxExchanges Exchanges and ≤ $maxScans parquet scans") {
+      val spark = session()
       SparkEntry.queries(name)(spark, sf).count() // warm shared caches
       val plan = SparkEntry.queries(name)(spark, sf)
         .queryExecution.executedPlan.toString

@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *                                       JP coloring, yens Bellman–Ford,
   *                                       Borůvka contraction, the
   *                                       serving snapshot, the
-  *                                       mst_invariants CC counts)
+  *                                       mst_invariants CC counts, the
+  *                                       kspan/leiden split checks'
+  *                                       CC, the driver-built ANN
+  *                                       IVF/PQ index)
   *   graft.dedup.clusters.localThreshold=0 (closure UF)
   *   graft.node2vec.adjBroadcastEdges=0 (CSR/adjacency broadcast draw)
   *   graft.dbscan.exactPointsThreshold=0 (LSH-banded eps pairs)
@@ -42,7 +45,10 @@ class R13GateForcedSpec extends AnyFunSuite {
     "communities_sllpa", "triangle_count", "truss_decay",
     "pagerank_topk", "fastrp_embeddings", "dedup_minhash_pairs",
     "bfs_hops", "communities_louvain", "communities_leiden",
-    "serve_user_books", "serve_recommendations", "mst_invariants")
+    "serve_user_books", "serve_recommendations", "mst_invariants",
+    "kspan_invariants", "leiden_invariants",
+    "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
+    "ivf_invariants", "pq_invariants", "ivfpq_invariants")
 
   private def runAll(confs: Seq[(String, String)]): Map[String, Seq[String]] = {
     val s = spark.newSession()

@@ -107,9 +107,6 @@ class ScaleToolsSpec extends AnyFunSuite {
   }
 
   test("serving lookups, snapshot leg: zero Spark jobs, ≡ the online per-user queries, empty user keeps the schema") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.recommend.{Recommend, Serving}
     val users = sampleUsers(5)
     // first lookups build the snapshots; the probe below times warm ones
@@ -117,32 +114,17 @@ class ScaleToolsSpec extends AnyFunSuite {
       Serving.userBooksLookup(spark, sf, u).collect()
       Serving.recommendationsLookup(spark, sf, u).collect()
     }
-    val jobs = new AtomicInteger()
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
-          marker.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val got = users.map(u => (Serving.userBooksLookup(spark, sf, u).collect().toSeq,
+    val (got, jobs) = jobsDuring {
+      users.map(u => (Serving.userBooksLookup(spark, sf, u).collect().toSeq,
         Serving.recommendationsLookup(spark, sf, u).collect().toSeq))
-      // the listener bus is FIFO: once the marker job's start arrives,
-      // every job the lookups could have started has been counted
-      sc.setLocalProperty("graft.spec.marker", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      assert(jobs.get == 0, s"warm lookups ran ${jobs.get} Spark jobs")
-      users.zip(got).foreach { case (u, (books, recs)) =>
-        assert(books == Recommend.userRatedBooks(spark, sf, u).collect().toSeq,
-          s"user $u: snapshot books != online query")
-        assert(recs == Recommend.recommendKnn(spark, sf, u).collect().toSeq,
-          s"user $u: snapshot recommendations != online query")
-      }
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"warm lookups ran $jobs Spark jobs")
+    users.zip(got).foreach { case (u, (books, recs)) =>
+      assert(books == Recommend.userRatedBooks(spark, sf, u).collect().toSeq,
+        s"user $u: snapshot books != online query")
+      assert(recs == Recommend.recommendKnn(spark, sf, u).collect().toSeq,
+        s"user $u: snapshot recommendations != online query")
+    }
     // a user with no ratings: no rows, and exactly the bucketed leg's
     // schema (names, types, nullability)
     val (noUser, forced) = (-1L, gateForcedSession())
@@ -323,6 +305,22 @@ class ScaleToolsSpec extends AnyFunSuite {
     probe()
     assert(builds == 2, "eviction should force a rebuild")
     Cache.clear(spark)
+  }
+
+  test("cache: clearing one session keeps another live session's identical frame cached") {
+    val (a, b) = (spark.newSession(), spark.newSession())
+    // two sessions, one name, the same plan: Spark holds ONE cache entry
+    def probe(s: org.apache.spark.sql.SparkSession) =
+      Cache.cached(s, sf, "cross-session-probe") { Tables.embeddings(s, sf).select("vec_id") }
+    val (fa, fb) = (probe(a), probe(b))
+    def isCached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    assert(isCached(fa))
+    Cache.clear(a)
+    assert(isCached(fb), "clearing session a uncached session b's frame")
+    Cache.clear(b)
+    assert(!isCached(fb),
+      "clearing the last holder must uncache the frame")
   }
 
   test("quality_filter plans exactly ONE documents scan (no self-join of the two signals)") {
