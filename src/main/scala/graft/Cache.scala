@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memoization of shared derived tables (ratings edges,
@@ -110,7 +111,13 @@ object Cache {
     val key = s"${sessionId(spark)}|$dir|$silverTag|$name"
     var df = store.get(key)
     if (df == null) {
-      df = build.persist(StorageLevel.MEMORY_AND_DISK)
+      val built = build
+      // a driver leg's output (or a projection of it) is kept as its
+      // LocalRelation: the rows are already on the driver, and persisting
+      // them would add a job to fill the cache and one per later action
+      df = GraftBridge.localRelation(built)
+        .map(GraftBridge.ofRows(spark, _))
+        .getOrElse(built.persist(StorageLevel.MEMORY_AND_DISK))
       val prev = store.putIfAbsent(key, df)
       if (prev != null) { df.unpersist(); df = prev }
     }

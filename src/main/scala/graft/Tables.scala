@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed readers for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -9,8 +10,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * callers decide materialisation.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaOf(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The parquet schema conversions an inferred schema depends on. */
+  private val SchemaConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The schema a plain read of `path` infers, memoised: inference runs a
+    * Spark job over the parquet footers on every read. The key is the
+    * qualified path with the name, length and modification time of each
+    * file at or directly under it (a rewritten table is inferred again),
+    * plus the session's schema-conversion confs. None when the path
+    * cannot be listed; the plain read then reports why. */
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = try fs.listStatus(p) catch { case _: java.io.IOException => return None }
+    val stamp = files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString(",")
+    val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
+    val key = s"${fs.makeQualified(p)}|$stamp|$confs"
+    Option(schemas.get(key)).orElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(key, inferred)
+      Some(inferred)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -5,9 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.ArrayData
+// Spark's order on doubles: NaN above everything, -0.0 equal to 0.0
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
@@ -674,39 +674,39 @@ object AnnSearch {
     private def probe(iv: LocalIvf, q: Array[Double], nProbe: Int): Seq[Int] = {
       val cos = iv.centroids.map(c => round6(CosineSim.local(c, q)))
       iv.cells.indices.sortWith { (a, b) =>
-        val c = sparkCompare(cos(a), cos(b))
+        val c = compareDoubles(cos(a), cos(b))
         if (c != 0) c > 0 else a < b
       }.take(nProbe).map(iv.cells)
     }
 
     def ivfCentroidsFrame(spark: SparkSession, nCells: Int): DataFrame = {
       val iv = ivf(nCells)
-      frame(spark, IvfCentroidsSchema, iv.cells.indices.map(j =>
+      GraftBridge.localFrame(spark, IvfCentroidsSchema, iv.cells.indices.map(j =>
         InternalRow(iv.cells(j), ArrayData.toArrayData(iv.centroids(j)))))
     }
 
     def ivfAssignmentFrame(spark: SparkSession, nCells: Int): DataFrame = {
       val iv = ivf(nCells)
-      frame(spark, IvfAssignmentSchema, vecs.indices.filter(iv.cellOf(_) >= 0).map(v =>
+      GraftBridge.localFrame(spark, IvfAssignmentSchema, vecs.indices.filter(iv.cellOf(_) >= 0).map(v =>
         InternalRow(ids(v), iv.cells(iv.cellOf(v)),
           ArrayData.toArrayData(vecs(v).map(_.toFloat)))))
     }
 
     def probeCellsFrame(spark: SparkSession, queryId: Long, nCells: Int,
         nProbe: Int): DataFrame =
-      frame(spark, ProbeCellsSchema, pos.get(queryId).toSeq
+      GraftBridge.localFrame(spark, ProbeCellsSchema, pos.get(queryId).toSeq
         .flatMap(q => probe(ivf(nCells), vecs(q), nProbe)).map(InternalRow(_)))
 
     def pqCodebooksFrame(spark: SparkSession, m: Int, ksub: Int): DataFrame = {
       val p = pq(m, ksub)
-      frame(spark, PqCodebooksSchema,
+      GraftBridge.localFrame(spark, PqCodebooksSchema,
         for (s <- 0 until m; j <- p.codes(s).indices)
           yield InternalRow(s, p.codes(s)(j), ArrayData.toArrayData(p.books(s)(j))))
     }
 
     def pqCodesFrame(spark: SparkSession, m: Int, ksub: Int): DataFrame = {
       val p = pq(m, ksub)
-      frame(spark, PqCodesSchema,
+      GraftBridge.localFrame(spark, PqCodesSchema,
         for (v <- vecs.indices; s <- 0 until m if p.codeOf(s)(v) >= 0)
           yield InternalRow(ids(v), s, p.codes(s)(p.codeOf(s)(v))))
     }
@@ -716,7 +716,7 @@ object AnnSearch {
     def ivfPqTopK(spark: SparkSession, queryId: Long, k: Int, nCells: Int,
         nProbe: Int, m: Int, ksub: Int, candMult: Int): DataFrame =
       pos.get(queryId) match {
-        case None => frame(spark, NoQuerySchema, Nil)
+        case None => GraftBridge.localFrame(spark, NoQuerySchema, Nil)
         case Some(qi) =>
           val q = vecs(qi)
           val iv = ivf(nCells)
@@ -729,15 +729,15 @@ object AnnSearch {
               (0 until m).forall(p.codeOf(_)(v) >= 0))
             .map(v => (v, adc(v)))
             .sortWith { case ((a, da), (b, db)) =>
-              val c = sparkCompare(da, db)
+              val c = compareDoubles(da, db)
               if (c != 0) c < 0 else ids(a) < ids(b)
             }.take(k * candMult)
           val top = candidates.map { case (v, _) => (v, CosineSim.local(vecs(v), q)) }
             .sortWith { case ((a, ca), (b, cb)) =>
-              val c = sparkCompare(ca, cb)
+              val c = compareDoubles(ca, cb)
               if (c != 0) c > 0 else ids(a) < ids(b)
             }.take(k)
-          frame(spark, TopKSchema, top.map { case (v, c) => InternalRow(ids(v), round6(c)) })
+          GraftBridge.localFrame(spark, TopKSchema, top.map { case (v, c) => InternalRow(ids(v), round6(c)) })
       }
   }
 
@@ -757,13 +757,6 @@ object AnnSearch {
   private val NoQuerySchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("cosine", DoubleType, nullable = false)))
 
-  private def frame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
-    GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
-
-  /** Spark's order on doubles: NaN above everything, -0.0 equal to 0.0. */
-  private def sparkCompare(x: Double, y: Double): Int =
-    if (x == y) 0 else java.lang.Double.compare(x, y)
-
   /** Squared L2 from `v[off, off + c.length)` to `c`: the sequential fold
     * of [[l2sq]]. */
   private def l2sqAt(v: Array[Double], off: Int, c: Array[Double]): Double = {
@@ -782,7 +775,7 @@ object AnnSearch {
     var j = 0
     while (j < n) {
       val s = score(j)
-      if (best < 0 || { val c = sparkCompare(s, bs); if (maximize) c > 0 else c < 0 }) {
+      if (best < 0 || { val c = compareDoubles(s, bs); if (maximize) c > 0 else c < 0 }) {
         best = j; bs = s
       }
       j += 1

@@ -1,9 +1,17 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+// Spark's order on doubles: NaN above everything, -0.0 equal to 0.0
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types._
 
 import graft.functions.VectorOps
+import graft.graph.Algorithms
 import graft.plans.CosineSim
 
 /** Random-hyperplane LSH for cosine similarity over `(id, vec)` tables.
@@ -14,6 +22,16 @@ import graft.plans.CosineSim
   * sign bits; candidate pairs collide in ≥1 band. This is the linear-scale
   * path for both near-dup detection and ANN: cost is |rows| × bands
   * shuffle instead of |rows|² compare.
+  *
+  * [[scoredPairs]] and [[knnFromScoredRaw]] are size-adaptive: under the
+  * shared gate (`Algorithms.driverGate`, `graft.driver.localThreshold`,
+  * default 5 M vector scalars, band candidates and scored pairs) they run
+  * on the driver with the same hyperplanes, dot fold, cosine kernel and
+  * top-k order ([[scoredPairsLocal]], [[knnLocal]]), one bounded collect
+  * each and none when the input is already a driver leg's output, and
+  * return `LocalRelation` frames with the distributed schemas. Over the
+  * gate, or with it at 0, the banded self-join and the `TopKPerKey`
+  * operator run.
   */
 object Lsh {
 
@@ -115,9 +133,86 @@ object Lsh {
     * wastes the dominant cost). */
   def scoredPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
       bands: Int = 8, bitsPerBand: Int = 10): DataFrame =
-    candidatePairs(df, idCol, vecCol, dim, bands, bitsPerBand)
-      .withColumn("cosine", CosineSim.cosine(df.sparkSession, col("vec_a"), col("vec_b")))
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    scoredPairsLocal(df, idCol, vecCol, dim, bands, bitsPerBand).getOrElse(
+      candidatePairs(df, idCol, vecCol, dim, bands, bitsPerBand)
+        .withColumn("cosine", CosineSim.cosine(df.sparkSession, col("vec_a"), col("vec_b")))
+        .select(col("id_a"), col("id_b"), col("cosine")))
+
+  private def num(v: Any): Long = v.asInstanceOf[Number].longValue
+
+  /** [[scoredPairs]] on the driver, or None for the distributed leg: the
+    * gate (`Algorithms.driverGate`, default 5 M) is at 0; the table holds
+    * more than gate vector scalars (rows × dim); the ids are not integral
+    * or the vectors not float/double arrays (the distributed leg reports
+    * those); a null or repeated id, or a vector that is not `dim` non-null
+    * elements (the distributed leg defines what those yield); or the band
+    * buckets hold more than gate candidate pairs (Σ over bands and
+    * buckets of C(n, 2)) — repeated vectors share every bucket, and the
+    * driver would build all n² of their pairs.
+    *
+    * One bounded collect loads the vectors, none when `df` is already a
+    * driver leg's output. Signatures use the same hyperplanes and the
+    * same left-fold dot (bit set when ≥ 0); pairs (id_a < id_b) that
+    * share a bucket in any band are deduplicated and scored with
+    * [[CosineSim.local]], the kernel's driver twin. */
+  private[graft] def scoredPairsLocal(df: DataFrame, idCol: String, vecCol: String,
+      dim: Int, bands: Int, bitsPerBand: Int, seed: Int = 7): Option[DataFrame] = {
+    val spark = df.sparkSession
+    val gate = Algorithms.driverGate(spark, 5000000L)
+    val in = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val id = in.schema("id")
+    val floatVec = in.schema("vec").dataType match {
+      case ArrayType(FloatType, _) => Some(true)
+      case ArrayType(DoubleType, _) => Some(false)
+      case _ => None
+    }
+    if (gate <= 0 || dim < 1 || !Algorithms.integral(id.dataType) || floatVec.isEmpty)
+      return None
+    val rows = Algorithms.driverRows(in, gate / dim)
+    def wellFormed(r: Row) = !r.isNullAt(0) && !r.isNullAt(1) && {
+      val v = r.getSeq[Any](1)
+      v.length == dim && !v.contains(null)
+    }
+    if (rows.length.toLong * dim > gate || !rows.forall(wellFormed)) return None
+    // vector indices in id order, so index order is the (id_a < id_b) order
+    val byId = rows.sortBy(r => num(r.get(0)))
+    val ids = byId.map(r => num(r.get(0)))
+    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
+    val vecs = byId.map(r =>
+      if (floatVec.get) r.getSeq[Float](1).iterator.map(_.toDouble).toArray
+      else r.getSeq[Double](1).toArray)
+
+    val planes = Array.tabulate(bands * bitsPerBand)(hyperplane(_, dim, seed))
+    def bucket(v: Array[Double], b: Int): Long = {
+      var key = 0L
+      var i = 0
+      while (i < bitsPerBand) {
+        val h = planes(b * bitsPerBand + i)
+        var dot = 0.0
+        var j = 0
+        while (j < dim) { dot += v(j) * h(j); j += 1 }
+        if (dot >= 0) key += 1L << i
+        i += 1
+      }
+      key
+    }
+    val n = vecs.length
+    val members = (0 until bands).map(b => (0 until n).groupBy(v => bucket(vecs(v), b)).values)
+    val candidates = members.iterator.flatten.map(g => g.length.toLong * (g.length - 1) / 2).sum
+    if (candidates > gate) return None
+    val pairs = members.iterator.flatten
+      .flatMap(g => for (x <- g.iterator; y <- g.iterator if x < y) yield x.toLong * n + y)
+      .toArray.sorted.distinct
+    val out = pairs.map { p =>
+      val (a, b) = ((p / n).toInt, (p % n).toInt)
+      InternalRow(byId(a).get(0), byId(b).get(0), CosineSim.local(vecs(a), vecs(b)))
+    }
+    Some(GraftBridge.localFrame(spark, StructType(Seq(
+        StructField("id_a", id.dataType, id.nullable),
+        StructField("id_b", id.dataType, id.nullable),
+        StructField("cosine", DoubleType))),
+      ArraySeq.unsafeWrapArray(out)))
+  }
 
   /** Incremental maintenance of the [[scoredPairs]] silver (T13 — the
     * T9 co-occurrence-MERGE story for the ANN tier): after a delta of
@@ -168,7 +263,45 @@ object Lsh {
     * the similarity carried UNROUNDED (callers round exactly once,
     * optionally after a scale transform — double rounding shifts the
     * 6th decimal). */
-  def knnFromScoredRaw(scored: DataFrame, topK: Int, cutoff: Double): DataFrame = {
+  def knnFromScoredRaw(scored: DataFrame, topK: Int, cutoff: Double): DataFrame =
+    knnLocal(scored, topK, cutoff).getOrElse(knnDistributed(scored, topK, cutoff))
+
+  /** [[knnFromScoredRaw]] on the driver, or None for the distributed leg:
+    * the gate is at 0; the table holds more than gate pairs; `topK` is not
+    * positive, the ids are not one integral type or the cosine is not a
+    * double (the distributed leg defines or reports those); or an id is
+    * null. One bounded collect, none when `scored` is already a driver
+    * leg's output. Both directions of each pair at or over the cutoff
+    * (Spark's double order: NaN above everything) compete per source by
+    * cosine descending, then target ascending — the [[graft.plans
+    * .TopKPerKey]] order — and the first `topK` are kept. */
+  private def knnLocal(scored: DataFrame, topK: Int, cutoff: Double): Option[DataFrame] = {
+    val spark = scored.sparkSession
+    val gate = Algorithms.driverGate(spark, 5000000L)
+    val in = scored.select(col("id_a"), col("id_b"), col("cosine"))
+    val Array(a, b, c) = in.schema.fields
+    if (gate <= 0 || topK <= 0 || a.dataType != b.dataType ||
+        !Algorithms.integral(a.dataType) || c.dataType != DoubleType) return None
+    val rows = Algorithms.driverRows(in, gate)
+    if (rows.length > gate || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val kept = rows.filter(r => !r.isNullAt(2) && compareDoubles(r.getDouble(2), cutoff) >= 0)
+    val out = (kept.map(r => (r.get(0), r.get(1), r.getDouble(2))) ++
+        kept.map(r => (r.get(1), r.get(0), r.getDouble(2))))
+      .groupBy(e => num(e._1)).toArray.sortBy(_._1)
+      .flatMap { case (_, es) =>
+        es.sortWith { (x, y) =>
+          val o = compareDoubles(x._3, y._3)
+          if (o != 0) o > 0 else num(x._2) < num(y._2)
+        }.take(topK)
+      }.map { case (s, d, cos) => InternalRow(s, d, cos) }
+    val ids = a.nullable || b.nullable
+    Some(GraftBridge.localFrame(spark, StructType(Seq(
+        StructField("src", a.dataType, ids), StructField("dst", a.dataType, ids),
+        StructField("similarity", DoubleType, c.nullable))),
+      ArraySeq.unsafeWrapArray(out)))
+  }
+
+  private def knnDistributed(scored: DataFrame, topK: Int, cutoff: Double): DataFrame = {
     val pairs = scored.filter(col("cosine") >= cutoff)
     val bidir = pairs.unionAll(
       pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b"), col("cosine")))

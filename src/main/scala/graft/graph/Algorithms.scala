@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.storage.StorageLevel
 
 /** DataFrame-iterative graph algorithms over (nodes, edges) tables —
@@ -71,6 +72,21 @@ object Algorithms {
   private[graft] def driverGate(spark: SparkSession, default: Long): Long =
     spark.conf.getOption("graft.driver.localThreshold")
       .map(_.toLong).getOrElse(default)
+
+  /** The rows of `df` for a driver leg, by one bounded collect: at most
+    * `cap` + 1 come back, so more than `cap` means over the gate. A frame
+    * that folds into a LocalRelation (another driver leg's output) is
+    * already on the driver and is read with no Spark job; any other runs
+    * as one task that stops after `cap` + 1 rows. */
+  private[graft] def driverRows(df: DataFrame, cap: Long): Array[Row] =
+    if (GraftBridge.localRelation(df).isDefined) df.collect()
+    else df.coalesce(1).limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+
+  /** Integral id columns: the driver legs key nodes by their long value. */
+  private[graft] def integral(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(t)
+  }
 
   private[graft] def iterState(df: DataFrame, rows: Long,
       rowBytes: Long = 32L): DataFrame = {
@@ -1096,8 +1112,7 @@ object Algorithms {
     // distributed loop below stays the 100 TB path.
     val spark = edges.sparkSession
     val eRaw = edges.select(col("src"), col("dst"))
-    val localThreshold = spark.conf.getOption("graft.core.localThreshold")
-      .map(_.toLong).getOrElse(5000000L)
+    val localThreshold = driverGate(spark, 5000000L)
     if (localThreshold > 0) {
       val probe = eRaw.localCheckpoint()
       if (probe.count() <= localThreshold) {
@@ -2213,18 +2228,10 @@ object Algorithms {
         i += 1
       }
       val sorted = es.sortBy(t => (t._1, t._2, t._3))
-      val parent = scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
+      val uf = new UnionFind
       val kept = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
       sorted.foreach { case (_, src, dst, w) =>
-        val (ra, rb) = (find(src), find(dst))
-        if (ra != rb) { parent(ra) = rb; kept += ((src, dst, w)) }
+        if (uf.union(src, dst)) kept += ((src, dst, w))
       }
       import sparkIn.implicits._
       return kept.toSeq.toDF("src", "dst", "weight")
@@ -2301,29 +2308,10 @@ object Algorithms {
             .otherwise(col("e.comp_s")).as("tgt"))
         val mapping: DataFrame =
           if (nPicks <= driverGate(e0.sparkSession, driverContractLimit)) {
-            val parent = scala.collection.mutable.Map[Long, Long]()
-            // iterative find + path compression: a recursive find would
-            // recurse chain-length deep (stack overflow near the 5M limit)
-            def find(x: Long): Long = {
-              var r = x
-              while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-              var c = x
-              while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-              r
-            }
-            val arr = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-            arr.foreach { case (a, b) =>
-              val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb
-            }
             // canonical label = min member comp id per merged set
-            val minOf = scala.collection.mutable.Map[Long, Long]()
-            parent.keys.foreach { c =>
-              val r = find(c)
-              minOf(r) = math.min(minOf.getOrElse(r, Long.MaxValue), c)
-            }
+            val arr = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
             import e0.sparkSession.implicits._
-            parent.keys.toSeq.map(c => (c, minOf(find(c))))
-              .toDF("old_comp", "new_comp")
+            UnionFind.componentsLocal(arr).toSeq.toDF("old_comp", "new_comp")
           } else {
             // checkpointFresh, not bare localCheckpoint: every jump
             // self-joins the previous frame, which would square carried

@@ -1,7 +1,13 @@
 package graft.graph
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types._
 
 /** FastRP (Fast Random Projection) node embeddings, matrix-free and
   * columnar.
@@ -36,6 +42,15 @@ import org.apache.spark.sql.functions._
   * (fold order, round-at-6 snaps) is IDENTICAL to the wide form, so
   * every downstream oracle hash is unchanged. Each step is one join +
   * one groupBy on node id — linear in |E|, no driver state, no collect.
+  *
+  * While the graph is under the shared gate (`Algorithms.driverGate`,
+  * `graft.driver.localThreshold`, default 5 M edges and 5 M state
+  * scalars), [[embedStates]] instead collects the edges once and runs the
+  * same kernels on the driver ([[embedLocal]]); its states and embedding
+  * are `LocalRelation` frames with the distributed schemas, so every
+  * consumer (the KNN build, the GDS fastRP modes, [[mergeEmbeddings]])
+  * takes them unchanged. Over the gate, or with it at 0, the Spark
+  * dataflow above runs.
   */
 object FastRP {
 
@@ -122,10 +137,96 @@ object FastRP {
   }
 
   /** [[embed]] with the per-iteration states retained (same
-    * computation — embed IS this function's `.embedding`). */
+    * computation — embed IS this function's `.embedding`). Runs on the
+    * driver while the graph is under the shared gate (see
+    * [[embedLocal]]), else as Spark joins and aggregates. */
   def embedStates(edges: DataFrame, dim: Int = 64,
       iterationWeights: Seq[Double] = Seq(0.0, 1.0, 1.0, 1.0),
-      seed: Int = 42): FastRpState = {
+      seed: Int = 42): FastRpState =
+    embedLocal(edges, dim, iterationWeights, seed)
+      .getOrElse(embedDistributed(edges, dim, iterationWeights, seed))
+
+  /** [[embedStates]] on the driver, or None for the distributed leg: the
+    * gate (`Algorithms.driverGate`, default 5 M) is at 0, there are more
+    * edges than the gate or more than gate state scalars (|V| · dim), an
+    * id is not integral or `dim` is outside the base kernel's range (the
+    * distributed leg reports those), or an edge has a null field (the
+    * distributed leg defines what that yields).
+    *
+    * One bounded collect loads the edges. Each state comes from the
+    * kernels the Spark expressions call: state 0 is the normalised base
+    * vector; each step sums weight · state over a node's in-edges
+    * ([[graft.plans.VecKernels.addScaled]], the wsum aggregate's step),
+    * divides by Σ weight and normalises, and a node without in-edges
+    * gets a zero vector; the combine is mulScalar then axpy in iteration
+    * order, normalised. The in-edge sums run in edge order rather than
+    * Spark's partial-aggregate order; the 6-dp snap absorbs that, as it
+    * does between two partitionings. The frames carry the distributed
+    * leg's schemas. */
+  private def embedLocal(edges: DataFrame, dim: Int, iterationWeights: Seq[Double],
+      seed: Int): Option[FastRpState] = {
+    val spark = edges.sparkSession
+    val gate = Algorithms.driverGate(spark, 5000000L)
+    val in = edges.select(col("src"), col("dst"), col("weight").cast("double"))
+    val id = in.schema("src")
+    if (gate <= 0 || dim < 1 || dim > 4096 || !Algorithms.integral(id.dataType) ||
+        !Algorithms.integral(in.schema("dst").dataType)) return None
+    val rows = Algorithms.driverRows(in, gate)
+    if (rows.length > gate || rows.exists(_.anyNull)) return None
+    def num(v: Any): Long = v.asInstanceOf[Number].longValue
+    // nodes are the distinct srcs in first-seen order, as in the Spark leg
+    val index = scala.collection.mutable.LongMap.empty[Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val src = rows.map { r =>
+      index.getOrElseUpdate(num(r.get(0)), { ids += r.get(0); ids.length - 1 })
+    }
+    val n = ids.length
+    if (n.toLong * dim > gate) return None
+    val dst = rows.map(r => index.getOrElse(num(r.get(1)), -1))
+    val w = rows.map(_.getDouble(2))
+    val vk = graft.plans.VecKernels
+
+    var state: Array[ArrayData] = Array.tabulate(n)(v =>
+      vk.norm6(graft.plans.FastRpBase.compute(num(ids(v)), dim, seed)))
+    val states = Seq.newBuilder[Array[ArrayData]]
+    states += state
+    var acc: Array[ArrayData] = state.map(vk.mulScalar(_, iterationWeights.head))
+    for (k <- 1 until iterationWeights.length) {
+      val sums = new Array[Array[Double]](n)
+      val wSum = new Array[Double](n)
+      var i = 0
+      while (i < rows.length) {
+        val d = dst(i)
+        if (d >= 0) {
+          if (sums(d) == null) sums(d) = new Array[Double](dim)
+          vk.addScaled(sums(d), state(src(i)), w(i))
+          wSum(d) += w(i)
+        }
+        i += 1
+      }
+      state = Array.tabulate(n)(v =>
+        if (sums(v) == null) new GenericArrayData(new Array[Double](dim))
+        else vk.norm6(vk.divScalar(new GenericArrayData(sums(v)), wSum(v))))
+      states += state
+      val prev = acc
+      acc = Array.tabulate(n)(v => vk.axpy(prev(v), state(v), iterationWeights(k)))
+    }
+
+    def frame(vecName: String, vecNullable: Boolean, vecs: Array[ArrayData]) =
+      GraftBridge.localFrame(spark, StructType(Seq(
+          StructField("node_id", id.dataType, id.nullable),
+          StructField(vecName, ArrayType(DoubleType, containsNull = false), vecNullable))),
+        ArraySeq.unsafeWrapArray(Array.tabulate(n)(v => InternalRow(ids(v), vecs(v)))))
+    // state 0's vector is null exactly when its id is; the propagated
+    // states are coalesced with a zero vector
+    val frames = states.result().zipWithIndex.map { case (st, k) =>
+      frame("emb", k == 0 && id.nullable, st)
+    }
+    Some(FastRpState(frames, frame("embedding", id.nullable, acc.map(vk.norm6))))
+  }
+
+  private def embedDistributed(edges: DataFrame, dim: Int,
+      iterationWeights: Seq[Double], seed: Int): FastRpState = {
     // r12 (guide §2.4/§3.1, measured with the stage listener): the old
     // shape shuffled ~733 MB per bipartite build at sf0.1 — each
     // iteration SMJ'd edges⋈state on src (re-shuffling both sides) and

@@ -8,29 +8,40 @@ package graft.graph
   * every round is a shuffle. Callers gate on a row-count threshold and
   * fall back to [[Algorithms.connectedComponents]] above it.
   *
-  * Component labels are the MIN member id (larger roots are parented to
-  * smaller), matching the distributed CC's labelling exactly — the two
-  * legs are interchangeable row-for-row.
+  * Roots are the MIN member id (larger roots are parented to smaller),
+  * matching the distributed CC's labelling exactly — the two legs are
+  * interchangeable row-for-row.
   */
+final class UnionFind {
+  private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+  /** The root (least member) of `x`'s set; an unseen id is its own set.
+    * Iterative, so a long chain cannot overflow the stack. */
+  def find(x: Long): Long = {
+    var r = x
+    while (parent.getOrElse(r, r) != r) r = parent(r)
+    var c = x // path compression
+    while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+    r
+  }
+
+  /** Merge the sets of `a` and `b`; false when they were already one. */
+  def union(a: Long, b: Long): Boolean = {
+    val (ra, rb) = (find(a), find(b))
+    if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    ra != rb
+  }
+}
+
 object UnionFind {
 
   /** (node, min-member-of-its-component) for every node incident to an
     * edge. Nodes not appearing in `edges` are absent (callers coalesce
     * singletons to their own id). */
   def componentsLocal(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(if (ra < rb) rb else ra) = math.min(ra, rb)
-    }
+    val uf = new UnionFind
+    edges.foreach { case (a, b) => uf.union(a, b) }
     val ids = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    ids.map(id => (id, find(id)))
+    ids.map(id => (id, uf.find(id)))
   }
 }

@@ -82,6 +82,14 @@ object VecKernels {
     new GenericArrayData(out)
   }
 
+  /** buf += x · w, element-wise over buf's length: the accumulation step
+    * of [[VecWSum]] and of the driver-side FastRP propagation. */
+  def addScaled(buf: Array[Double], x: ArrayData, w: Double): Unit = {
+    var i = 0
+    val n = buf.length
+    while (i < n) { buf(i) += x.getDouble(i) * w; i += 1 }
+  }
+
   private def arrD(e: Expression): Boolean = e.dataType match {
     case ArrayType(DoubleType, _) => true
     case _ => false
@@ -248,9 +256,7 @@ case class VecWSum(emb: Expression, weight: Expression,
     // answer the old per-column sums couldn't produce (r13, ADVICE fix)
     require(arr.numElements() == b.length,
       s"graft_vec_wsum: ragged input arrays (${arr.numElements()} vs ${b.length})")
-    var i = 0
-    val n = b.length
-    while (i < n) { b(i) += arr.getDouble(i) * wd; i += 1 }
+    VecKernels.addScaled(b, arr, wd)
     b
   }
 

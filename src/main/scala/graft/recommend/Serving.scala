@@ -9,8 +9,6 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.StructType
@@ -179,8 +177,8 @@ object Serving {
     /** One user's rows in lookup order, under fresh attribute ids (two
       * lookups may meet in one plan). */
     def lookup(spark: SparkSession, user: Long): DataFrame =
-      GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema),
-        ArraySeq.unsafeWrapArray(byUser.getOrElse(user, Array.empty[InternalRow]))))
+      GraftBridge.localFrame(spark, schema,
+        ArraySeq.unsafeWrapArray(byUser.getOrElse(user, Array.empty[InternalRow])))
   }
 
   /** A point lookup: one user's `payload` columns in `order`. Answered

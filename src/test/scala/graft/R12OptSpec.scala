@@ -26,11 +26,11 @@ class R12OptSpec extends AnyFunSuite {
       .toDF("src", "dst")
     val local = graph.Algorithms.coreDecomposition(edges)
       .orderBy("node_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    spark.conf.set("graft.core.localThreshold", "0")
+    spark.conf.set("graft.driver.localThreshold", "0")
     val dist =
       try graph.Algorithms.coreDecomposition(edges)
         .orderBy("node_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-      finally spark.conf.unset("graft.core.localThreshold")
+      finally spark.conf.unset("graft.driver.localThreshold")
     assert(local.toSeq == dist.toSeq)
     val m = local.toMap
     assert(Seq(1L, 2L, 3L, 4L, 5L).forall(m(_) == 4L))

@@ -9,15 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *   graft.iter.broadcastBytes=0        (all loop-state broadcast pins,
   *                                       oriented-adj pin, sllpa memArr)
-  *   graft.core.localThreshold=0        (BZ core-decomposition driver leg)
   *   graft.driver.localThreshold=0      (UnionFind CC, driver Tarjan SCC,
+  *                                       BZ core decomposition,
   *                                       JP coloring, yens Bellman–Ford,
   *                                       Borůvka contraction, the
   *                                       serving snapshot, the
   *                                       mst_invariants CC counts, the
   *                                       kspan/leiden split checks'
   *                                       CC, the driver-built ANN
-  *                                       IVF/PQ index)
+  *                                       IVF/PQ index, the driver
+  *                                       FastRP states, LSH scored
+  *                                       pairs and KNN top-k)
   *   graft.dedup.clusters.localThreshold=0 (closure UF)
   *   graft.node2vec.adjBroadcastEdges=0 (CSR/adjacency broadcast draw)
   *   graft.dbscan.exactPointsThreshold=0 (LSH-banded eps pairs)
@@ -31,7 +33,6 @@ class R13GateForcedSpec extends AnyFunSuite {
 
   private val ForcedConfs = Seq(
     "graft.iter.broadcastBytes" -> "0",
-    "graft.core.localThreshold" -> "0",
     "graft.driver.localThreshold" -> "0",
     "graft.dedup.clusters.localThreshold" -> "0",
     "graft.node2vec.adjBroadcastEdges" -> "0",
@@ -48,7 +49,9 @@ class R13GateForcedSpec extends AnyFunSuite {
     "serve_user_books", "serve_recommendations", "mst_invariants",
     "kspan_invariants", "leiden_invariants",
     "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
-    "ivf_invariants", "pq_invariants", "ivfpq_invariants")
+    "ivf_invariants", "pq_invariants", "ivfpq_invariants",
+    "fastrp_norms", "knn_similar_edges", "knn_similar_edges_ref",
+    "knn_edges_invariants", "gds_knn_write", "recommend_knn_embedding")
 
   private def runAll(confs: Seq[(String, String)]): Map[String, Seq[String]] = {
     val s = spark.newSession()
