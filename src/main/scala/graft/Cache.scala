@@ -59,12 +59,16 @@ object Cache {
       })
     }
 
-  /** Drop every entry whose DataFrame belongs to `sc` (no unpersist: the
-    * context's storage dies with it; the point is unpinning the plan and
-    * session references). Package-private so the spec can exercise the
-    * listener's action directly — stopping the shared test context to
-    * fire the real event would kill the suite. */
+  /** Drop every entry whose DataFrame belongs to `sc`, once `sc` has
+    * stopped (no unpersist: the context's storage dies with it; the point
+    * is unpinning the plan and session references). A live context is
+    * refused: dropping its entries without unpersisting would leave their
+    * cached data behind with no holder on record, and a later [[clear]]
+    * of another session could then unpersist data that live plans still
+    * read. Live sessions are dropped one at a time by [[clear]]. */
   private[graft] def evictContext(sc: SparkContext): Unit = {
+    require(sc.isStopped, "Cache.evictContext: the context is still running; " +
+      "clear its sessions with Cache.clear instead")
     val it = store.entrySet().iterator()
     while (it.hasNext) {
       if (it.next().getValue.sparkSession.sparkContext eq sc) it.remove()
@@ -109,14 +113,19 @@ object Cache {
     val silverTag = spark.conf
       .getOption(graft.graph.RatingsGraph.SilverTableConf).getOrElse("-")
     val key = s"${sessionId(spark)}|$dir|$silverTag|$name"
+    // the session's plans over driver-held silvers take the driver route
+    graft.plans.LocalPlans.ensureStrategy(spark)
     var df = store.get(key)
     if (df == null) {
       val built = build
       // a driver leg's output (or a projection of it) is kept as its
       // LocalRelation: the rows are already on the driver, and persisting
-      // them would add a job to fill the cache and one per later action
+      // them would add a job to fill the cache and one per later action;
+      // any other plan over local frames that the driver route runs is
+      // computed there once and kept the same way
       df = GraftBridge.localRelation(built)
         .map(GraftBridge.ofRows(spark, _))
+        .orElse(graft.plans.LocalPlans.materialize(built))
         .getOrElse(built.persist(StorageLevel.MEMORY_AND_DISK))
       val prev = store.putIfAbsent(key, df)
       if (prev != null) { df.unpersist(); df = prev }

@@ -651,7 +651,7 @@ object SparkEntry {
       // distributed CC beyond. A spanning TREE is the worst-diameter
       // graph label propagation can see, so the forest side's
       // distributed leg runs maxIter=60 (~5 + log2(diameter) rounds)
-      val gate = graft.graph.Algorithms.driverGate(s, 5000000L)
+      val gate = graft.graph.Algorithms.driverGate(s, graft.graph.Algorithms.DriverGateDefault)
       def components(edges: DataFrame, nEdges: Long, maxIter: Int): Long = {
         val e = edges.select(col("src"), col("dst"))
         if (gate > 0 && nEdges <= gate)
@@ -1442,7 +1442,7 @@ object SparkEntry {
       .filter(col("sc") === col("dc")).select(col("src"), col("dst"))
       .localCheckpoint()
     val spark = labels.sparkSession
-    val gate = graft.graph.Algorithms.driverGate(spark, 5000000L)
+    val gate = graft.graph.Algorithms.driverGate(spark, graft.graph.Algorithms.DriverGateDefault)
     val comp =
       if (gate > 0 && intra.count() <= gate) {
         val es = intra.collect().map(r => (r.getLong(0), r.getLong(1)))

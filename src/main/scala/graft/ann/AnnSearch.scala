@@ -591,7 +591,7 @@ object AnnSearch {
     * at 0, the corpus holds more than `driverGate` vector scalars, or it
     * is ill-formed (see [[LocalIndex.load]]). */
   private[graft] def localIndex(spark: SparkSession, dir: String): Option[LocalIndex] = {
-    val gate = Algorithms.driverGate(spark, 5000000L)
+    val gate = Algorithms.driverGate(spark, Algorithms.DriverGateDefault)
     if (gate <= 0) None
     else indexes.computeIfAbsent(s"${graft.Cache.sessionId(spark)}|$dir|$gate",
       _ => new IndexHolder(LocalIndex.load(Tables.embeddingVectors(spark, dir), gate))).index

@@ -4,8 +4,6 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-// Spark's order on doubles: NaN above everything, -0.0 equal to 0.0
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
@@ -23,15 +21,15 @@ import graft.plans.CosineSim
   * path for both near-dup detection and ANN: cost is |rows| × bands
   * shuffle instead of |rows|² compare.
   *
-  * [[scoredPairs]] and [[knnFromScoredRaw]] are size-adaptive: under the
-  * shared gate (`Algorithms.driverGate`, `graft.driver.localThreshold`,
-  * default 5 M vector scalars, band candidates and scored pairs) they run
-  * on the driver with the same hyperplanes, dot fold, cosine kernel and
-  * top-k order ([[scoredPairsLocal]], [[knnLocal]]), one bounded collect
-  * each and none when the input is already a driver leg's output, and
-  * return `LocalRelation` frames with the distributed schemas. Over the
-  * gate, or with it at 0, the banded self-join and the `TopKPerKey`
-  * operator run.
+  * [[scoredPairs]] is size-adaptive: under the shared gate
+  * (`Algorithms.driverGate`, `graft.driver.localThreshold`, default 5 M
+  * vector scalars and band candidates) it runs on the driver with the
+  * same hyperplanes, dot fold and cosine kernel ([[scoredPairsLocal]]),
+  * one bounded collect and none when the input is already a driver leg's
+  * output, and returns a `LocalRelation` frame with the distributed
+  * schema. Over the gate, or with it at 0, the banded self-join runs.
+  * [[knnFromScoredRaw]] is one plan; over a driver-leg scored frame
+  * under the gate, `graft.plans.LocalPlans` runs it on the driver.
   */
 object Lsh {
 
@@ -158,7 +156,7 @@ object Lsh {
   private[graft] def scoredPairsLocal(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, bands: Int, bitsPerBand: Int, seed: Int = 7): Option[DataFrame] = {
     val spark = df.sparkSession
-    val gate = Algorithms.driverGate(spark, 5000000L)
+    val gate = Algorithms.driverGate(spark, Algorithms.DriverGateDefault)
     val in = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val id = in.schema("id")
     val floatVec = in.schema("vec").dataType match {
@@ -263,45 +261,7 @@ object Lsh {
     * the similarity carried UNROUNDED (callers round exactly once,
     * optionally after a scale transform — double rounding shifts the
     * 6th decimal). */
-  def knnFromScoredRaw(scored: DataFrame, topK: Int, cutoff: Double): DataFrame =
-    knnLocal(scored, topK, cutoff).getOrElse(knnDistributed(scored, topK, cutoff))
-
-  /** [[knnFromScoredRaw]] on the driver, or None for the distributed leg:
-    * the gate is at 0; the table holds more than gate pairs; `topK` is not
-    * positive, the ids are not one integral type or the cosine is not a
-    * double (the distributed leg defines or reports those); or an id is
-    * null. One bounded collect, none when `scored` is already a driver
-    * leg's output. Both directions of each pair at or over the cutoff
-    * (Spark's double order: NaN above everything) compete per source by
-    * cosine descending, then target ascending — the [[graft.plans
-    * .TopKPerKey]] order — and the first `topK` are kept. */
-  private def knnLocal(scored: DataFrame, topK: Int, cutoff: Double): Option[DataFrame] = {
-    val spark = scored.sparkSession
-    val gate = Algorithms.driverGate(spark, 5000000L)
-    val in = scored.select(col("id_a"), col("id_b"), col("cosine"))
-    val Array(a, b, c) = in.schema.fields
-    if (gate <= 0 || topK <= 0 || a.dataType != b.dataType ||
-        !Algorithms.integral(a.dataType) || c.dataType != DoubleType) return None
-    val rows = Algorithms.driverRows(in, gate)
-    if (rows.length > gate || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val kept = rows.filter(r => !r.isNullAt(2) && compareDoubles(r.getDouble(2), cutoff) >= 0)
-    val out = (kept.map(r => (r.get(0), r.get(1), r.getDouble(2))) ++
-        kept.map(r => (r.get(1), r.get(0), r.getDouble(2))))
-      .groupBy(e => num(e._1)).toArray.sortBy(_._1)
-      .flatMap { case (_, es) =>
-        es.sortWith { (x, y) =>
-          val o = compareDoubles(x._3, y._3)
-          if (o != 0) o > 0 else num(x._2) < num(y._2)
-        }.take(topK)
-      }.map { case (s, d, cos) => InternalRow(s, d, cos) }
-    val ids = a.nullable || b.nullable
-    Some(GraftBridge.localFrame(spark, StructType(Seq(
-        StructField("src", a.dataType, ids), StructField("dst", a.dataType, ids),
-        StructField("similarity", DoubleType, c.nullable))),
-      ArraySeq.unsafeWrapArray(out)))
-  }
-
-  private def knnDistributed(scored: DataFrame, topK: Int, cutoff: Double): DataFrame = {
+  def knnFromScoredRaw(scored: DataFrame, topK: Int, cutoff: Double): DataFrame = {
     val pairs = scored.filter(col("cosine") >= cutoff)
     val bidir = pairs.unionAll(
       pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b"), col("cosine")))

@@ -1933,8 +1933,9 @@ final class GdsSession(initial: CypherLite.Graph) {
     import spark.implicits._
     val edges = forest.select(col("src"), col("dst"),
       col("weight").cast("double")).collect()
-    require(edges.length <= 5000000,
-      s"rooted spanningTree stream is driver-side and gated at 5M forest " +
+    require(edges.length <= graft.graph.Algorithms.DriverGateDefault,
+      s"rooted spanningTree stream is driver-side and gated at " +
+        s"${graft.graph.Algorithms.DriverGateDefault} forest " +
         s"edges, got ${edges.length}; use the unrooted forest at this scale")
     val adj = scala.collection.mutable.Map
       .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]

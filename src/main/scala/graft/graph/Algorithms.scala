@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
@@ -73,6 +74,10 @@ object Algorithms {
     spark.conf.getOption("graft.driver.localThreshold")
       .map(_.toLong).getOrElse(default)
 
+  /** The default size every driver leg is gated at (rows, edges, pairs
+    * or vector scalars, as each leg measures). */
+  val DriverGateDefault = 5000000L
+
   /** The rows of `df` for a driver leg, by one bounded collect: at most
     * `cap` + 1 come back, so more than `cap` means over the gate. A frame
     * that folds into a LocalRelation (another driver leg's output) is
@@ -81,6 +86,42 @@ object Algorithms {
   private[graft] def driverRows(df: DataFrame, cap: Long): Array[Row] =
     if (GraftBridge.localRelation(df).isDefined) df.collect()
     else df.coalesce(1).limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+
+  /** `dfs` as local frames holding their rows on the driver, or None
+    * when together they hold more than `cap` rows (or `cap` is not
+    * positive). A frame that already folds into a LocalRelation is taken
+    * as it is; all the others come in by ONE bounded collect: each is
+    * wrapped as a struct in its own slot of a union, and one task reads
+    * the union until `cap` + 1 rows. */
+  private[graft] def driverFrames(dfs: Seq[DataFrame], cap: Long): Option[Seq[DataFrame]] = {
+    if (cap <= 0) return None
+    val local = dfs.map(GraftBridge.localRelation)
+    val remote = dfs.indices.filter(local(_).isEmpty)
+    val localRows = local.flatten.map(_.data.size.toLong).sum
+    if (localRows > cap) return None
+    val fetched = if (remote.isEmpty) Array.empty[Row] else {
+      val slots = remote.map(dfs(_).schema)
+      remote.zipWithIndex.map { case (i, j) =>
+        dfs(i).select(lit(j).as("slot") +: slots.indices.map { k =>
+          (if (k == j) struct(col("*")) else lit(null).cast(slots(k))).as(s"s$k")
+        }: _*)
+      }.reduce(_ unionAll _)
+        .coalesce(1).limit(math.min(cap - localRows + 1, Int.MaxValue.toLong).toInt).collect()
+    }
+    if (localRows + fetched.length > cap) return None
+    val bySlot = fetched.groupBy(_.getInt(0))
+    Some(dfs.indices.map { i =>
+      val j = remote.indexOf(i)
+      if (j < 0) dfs(i)
+      else {
+        val schema = dfs(i).schema
+        val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+        GraftBridge.localFrame(dfs(i).sparkSession, schema,
+          bySlot.getOrElse(j, Array.empty[Row]).toSeq
+            .map(r => toInternal(r.getStruct(j + 1)).asInstanceOf[InternalRow]))
+      }
+    })
+  }
 
   /** Integral id columns: the driver legs key nodes by their long value. */
   private[graft] def integral(t: org.apache.spark.sql.types.DataType): Boolean = {
@@ -104,7 +145,7 @@ object Algorithms {
     * task. Both legs label by MIN member, so rows are identical. The
     * distributed loop stays the 100 TB fallback. */
   def connectedComponentsAdaptive(edges: DataFrame, maxIter: Int = 20,
-      localThreshold: Long = 5000000L): DataFrame = {
+      localThreshold: Long = DriverGateDefault): DataFrame = {
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
     val gate = driverGate(edges.sparkSession, localThreshold)
     if (gate > 0 && e.count() <= gate) {
@@ -1112,7 +1153,7 @@ object Algorithms {
     // distributed loop below stays the 100 TB path.
     val spark = edges.sparkSession
     val eRaw = edges.select(col("src"), col("dst"))
-    val localThreshold = driverGate(spark, 5000000L)
+    val localThreshold = driverGate(spark, DriverGateDefault)
     if (localThreshold > 0) {
       val probe = eRaw.localCheckpoint()
       if (probe.count() <= localThreshold) {
@@ -1505,7 +1546,7 @@ object Algorithms {
     * than k rank-groups when the graph has fewer loopless paths
     * within the hop budget. */
   def yensPaths(lengths: DataFrame, source: Long, target: Long, k: Int = 3,
-      rounds: Int = 6, driverLimit: Long = 5000000L): DataFrame = {
+      rounds: Int = 6, driverLimit: Long = DriverGateDefault): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = lengths.sparkSession
     import spark.implicits._
@@ -2204,7 +2245,7 @@ object Algorithms {
     * it. Input: one row per undirected pair. Returns the forest edges
     * (src, dst, weight). */
   def spanningForest(edges: DataFrame, maximum: Boolean = true,
-      maxRounds: Int = 25, driverContractLimit: Long = 5000000L): DataFrame = {
+      maxRounds: Int = 25, driverContractLimit: Long = DriverGateDefault): DataFrame = {
     // r13 driver leg (the CC/SCC/BZ precedent, same 5 M-edge gate): the
     // forest under the STRICT total order (∓weight, src, dst) is the
     // unique greedy basis of the graphic matroid, so Kruskal on the
@@ -2366,7 +2407,7 @@ object Algorithms {
     * distributed branch keeps `maxRounds` as a tie-deadlock guard,
     * sized so a legitimate deep run is not truncated. */
   def k1Coloring(edges: DataFrame, maxRounds: Int = 300,
-      driverLimit: Long = 5000000L): DataFrame = {
+      driverLimit: Long = DriverGateDefault): DataFrame = {
     val bidir = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -3341,7 +3382,7 @@ object Algorithms {
     * the output is deterministic and matches the mutual-reachability
     * oracle's MIN-label contract. */
   def stronglyConnectedComponents(edgesIn: DataFrame, maxOuter: Int = 30,
-      maxInner: Int = 100, localThreshold: Long = 5000000L): DataFrame = {
+      maxInner: Int = 100, localThreshold: Long = DriverGateDefault): DataFrame = {
     val spark = edgesIn.sparkSession
     var e = checkpointFresh(edgesIn.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())

@@ -166,7 +166,7 @@ object FastRP {
   private def embedLocal(edges: DataFrame, dim: Int, iterationWeights: Seq[Double],
       seed: Int): Option[FastRpState] = {
     val spark = edges.sparkSession
-    val gate = Algorithms.driverGate(spark, 5000000L)
+    val gate = Algorithms.driverGate(spark, Algorithms.DriverGateDefault)
     val in = edges.select(col("src"), col("dst"), col("weight").cast("double"))
     val id = in.schema("src")
     if (gate <= 0 || dim < 1 || dim > 4096 || !Algorithms.integral(id.dataType) ||

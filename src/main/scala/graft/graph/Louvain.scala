@@ -71,7 +71,7 @@ object Louvain {
     // (probe: 16.5 s wall, 167 stages, the #2 silver). Non-integral
     // weights (where sum ORDER matters) always take the distributed
     // path; the gate-forced spec pins the fallback row-identical.
-    if (nEdgeRows <= Algorithms.driverGate(eBase.sparkSession, 5000000L) && integral) {
+    if (nEdgeRows <= Algorithms.driverGate(eBase.sparkSession, Algorithms.DriverGateDefault) && integral) {
       val rows = eBase.collect()
       val initMap = init.map { l0 =>
         val m = new scala.collection.mutable.LongMap[Long]()

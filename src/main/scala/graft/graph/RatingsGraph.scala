@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.LocalPlans
+
 /** The bipartite User–Book RATED property graph, derived from the TPC-H
   * testdata.
   *
@@ -127,18 +129,35 @@ object RatingsGraph {
     * update touches the liked-index buckets of those books only, never
     * the full projection (spec-proved ≡ the rebuilt projection).
     * Returns (newCooc, newRatings). maxFanout is not supported here —
-    * the top-N-raters cap is not monotone under insertion. */
+    * the top-N-raters cap is not monotone under insertion.
+    *
+    * While the three inputs hold at most `graft.driver.localThreshold`
+    * rows in all, they come in as local frames (one bounded collect for
+    * those that are not local already) and both returned plans run on the
+    * driver through `graft.plans.LocalPlans`, computed there once; the
+    * newly-liked set is a driver materialisation instead of an eager
+    * local checkpoint. */
   def mergeCooccurrence(oldCooc: DataFrame, oldRatings: DataFrame,
+      deltaEvents: DataFrame): (DataFrame, DataFrame) =
+    LocalPlans.overLocalInputs(oldCooc, oldRatings, deltaEvents) {
+      case Seq(oldCooc, oldRatings, deltaEvents) =>
+        // on the driver leg both are computed once here: the serving
+        // merge reads them three times
+        val (newCooc, newRatings) = foldCooccurrence(oldCooc, oldRatings, deltaEvents)
+        (LocalPlans.materialize(newCooc).getOrElse(newCooc),
+          LocalPlans.materialize(newRatings).getOrElse(newRatings))
+    }
+
+  private def foldCooccurrence(oldCooc: DataFrame, oldRatings: DataFrame,
       deltaEvents: DataFrame): (DataFrame, DataFrame) = {
     val newRatings = mergeRatings(oldRatings, deltaEvents)
     val oldLiked = oldRatings.filter(col("rating") >= 6)
       .select(col("user_id"), col("book_id"))
     // newly liked = liked now, not liked before (monotone: rating rose
     // across the 6 threshold, or the pair is brand-new)
-    val newlyLiked = newRatings.filter(col("rating") >= 6)
+    val newlyLiked = LocalPlans.localCheckpoint(newRatings.filter(col("rating") >= 6)
       .select(col("user_id"), col("book_id"))
-      .join(oldLiked, Seq("user_id", "book_id"), "left_anti")
-      .localCheckpoint()
+      .join(oldLiked, Seq("user_id", "book_id"), "left_anti"))
     val touchedBooks = newlyLiked.select(col("book_id")).distinct()
     // NB the semi-join puts its key FIRST — re-project to (user, book)
     // before the position-based union, or every newlyLiked row arrives

@@ -156,7 +156,8 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
         }
       }
 
-      pass(iter)
+      // a top-0 (or less) keeps nothing: no heap is ever seeded
+      if (kk <= 0) Iterator.empty else pass(iter)
     }
   }
 
@@ -201,6 +202,8 @@ object TopKPerKey {
       orderCols: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
     ensureStrategy(spark)
+    // a top-k over local frames runs on the driver
+    LocalPlans.ensureStrategy(spark)
     val maxHeapKeys = spark.conf.getOption(MaxHeapKeysConf)
       .map(_.toInt).getOrElse(DefaultMaxHeapKeys)
     require(maxHeapKeys > 0, s"$MaxHeapKeysConf must be positive")

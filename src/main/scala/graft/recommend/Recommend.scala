@@ -39,14 +39,19 @@ object Recommend {
     * name/community/segment are this data model's user properties).
     * Reference `recommender_knn.py:31-45` (get_similar_users) with the
     * co-occurrence graph standing in for SIMILAR_TO. */
-  def similarUsersCooc(spark: SparkSession, dir: String, user: Long = TargetUser, k: Int = 3): DataFrame = {
-    val top = RatingsGraph.cooccurrenceEdges(spark, dir)
+  def similarUsersCooc(spark: SparkSession, dir: String, user: Long = TargetUser, k: Int = 3): DataFrame =
+    similarUsersFrom(RatingsGraph.cooccurrenceEdges(spark, dir),
+      RatingsGraph.activeUsers(spark, dir), user, k)
+
+  /** [[similarUsersCooc]] over any (cooc, active users) pair. */
+  def similarUsersFrom(cooc: DataFrame, users: DataFrame, user: Long, k: Int): DataFrame = {
+    val top = cooc
       .filter(col("u1") === user)
       .select(col("u2").as("user_id"), col("weight"))
       .orderBy(col("weight").desc, col("user_id"))
       .limit(k)
     // tiny top-k side broadcast against the full user-property table
-    RatingsGraph.activeUsers(spark, dir)
+    users
       .join(broadcast(top), Seq("user_id"))
       .select(col("user_id"), col("name"), col("community"), col("segment"), col("weight"))
       .orderBy(col("weight").desc, col("user_id"))
@@ -113,8 +118,13 @@ object Recommend {
   /** Community recommendation parameterised by any (user_id, community)
     * assignment — static attribute or learned labels. */
   def recommendCommunityWith(spark: SparkSession, dir: String, users: DataFrame,
+      user: Long, k: Int): DataFrame =
+    recommendCommunityFrom(RatingsGraph.ratings(spark, dir),
+      RatingsGraph.ratedBooks(spark, dir), users, user, k)
+
+  /** [[recommendCommunityWith]] over any (ratings, books) pair. */
+  def recommendCommunityFrom(ratings: DataFrame, books: DataFrame, users: DataFrame,
       user: Long, k: Int): DataFrame = {
-    val ratings = RatingsGraph.ratings(spark, dir)
     val targetCommunity = users.filter(col("user_id") === user).select(col("community"))
     val peers = users
       .join(broadcast(targetCommunity), Seq("community"))
@@ -131,7 +141,7 @@ object Recommend {
       .agg(count(lit(1)).as("recommend_count"))
       .orderBy(col("recommend_count").desc, col("book_id"))
       .limit(k)
-    RatingsGraph.ratedBooks(spark, dir).join(broadcast(top), Seq("book_id"))
+    books.join(broadcast(top), Seq("book_id"))
       .select(col("book_id"), col("title"), col("recommend_count"))
       .orderBy(col("recommend_count").desc, col("book_id"))
   }

@@ -14,6 +14,7 @@ import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.StructType
 
 import graft.graph.{Algorithms, RatingsGraph}
+import graft.plans.LocalPlans
 
 /** The reference app's INTERACTIVE serving path. `streamlit_app.py:33-46`
   * (get_user_rated_books) and `recommender_knn.py:11-28` (recommend_books)
@@ -198,7 +199,7 @@ object Serving {
         if (old != null) state.session.catalog.refreshTable(table)
         new Snapshot(state.session, table, created, payload, order)
       })
-    val gate = Algorithms.driverGate(spark, 5000000L)
+    val gate = Algorithms.driverGate(spark, Algorithms.DriverGateDefault)
     if (gate > 0 && snapshot.rows <= gate) snapshot.lookup(spark, user)
     else state.session.table(table)
       .filter(col("user_id") === user)
@@ -263,16 +264,25 @@ object Serving {
     * every join keyed on the delta, never a full recompute. At 100 TB
     * this is a keyed MERGE into the bucketed table (the delta's user
     * ids prune to their buckets); locally the dataflow is spec-proved
-    * ≡ the full rebuild on the merged ratings. */
+    * ≡ the full rebuild on the merged ratings.
+    *
+    * Driver leg: while the four inputs hold at most
+    * `graft.driver.localThreshold` rows in all, the ones that are not
+    * local frames already come in by one bounded collect, and the
+    * returned frame's plan is all-local: `graft.plans.LocalPlans` runs it
+    * on the driver (no job to collect it). Over the gate the same plan
+    * runs distributed. */
   def mergeUserBooksServing(base: DataFrame, oldRatings: DataFrame,
-      deltaEvents: DataFrame, books: DataFrame): DataFrame = {
-    val newRatings = RatingsGraph.mergeRatings(oldRatings, deltaEvents)
-    val touched = deltaEvents.filter(col("rating") =!= 0)
-      .select(col("user_id")).distinct()
-    val rebuilt = userBooksPayload(
-      newRatings.join(touched, Seq("user_id"), "left_semi"), books)
-    base.join(touched, Seq("user_id"), "left_anti").unionAll(rebuilt)
-  }
+      deltaEvents: DataFrame, books: DataFrame): DataFrame =
+    LocalPlans.overLocalInputs(base, oldRatings, deltaEvents, books) {
+      case Seq(base, oldRatings, deltaEvents, books) =>
+        val newRatings = RatingsGraph.mergeRatings(oldRatings, deltaEvents)
+        val touched = deltaEvents.filter(col("rating") =!= 0)
+          .select(col("user_id")).distinct()
+        val rebuilt = userBooksPayload(
+          newRatings.join(touched, Seq("user_id"), "left_semi"), books)
+        base.join(touched, Seq("user_id"), "left_anti").unionAll(rebuilt)
+    }
 
   /** Incremental maintenance of the recommendation serving payload —
     * the serving-freshness story composed with T9's incremental
@@ -287,25 +297,29 @@ object Serving {
     * covers the old), so the payload rebuild is restricted to that
     * blast radius and every join stays keyed on it. Returns
     * (mergedServing, newCooc, newRatings); spec-proved ≡ the full
-    * rebuild. */
+    * rebuild. Same driver leg as [[mergeUserBooksServing]] over its five
+    * inputs; the affected set is materialised on the driver there, and
+    * by an eager local checkpoint over the gate. */
   def mergeRecommendationsServing(base: DataFrame, oldCooc: DataFrame,
       oldRatings: DataFrame, deltaEvents: DataFrame, books: DataFrame,
-      simK: Int = 20, k: Int = 3): (DataFrame, DataFrame, DataFrame) = {
-    val (newCooc, newRatings) =
-      RatingsGraph.mergeCooccurrence(oldCooc, oldRatings, deltaEvents)
-    val deltaUsers = deltaEvents.filter(col("rating") =!= 0)
-      .select(col("user_id")).distinct()
-    val affected = deltaUsers
-      .unionAll(newCooc
-        .join(deltaUsers.select(col("user_id").as("u2")), Seq("u2"), "left_semi")
-        .select(col("u1").as("user_id")))
-      .distinct().localCheckpoint()
-    val rebuilt = recommendationsPayload(newRatings,
-      newCooc.join(affected.select(col("user_id").as("u1")), Seq("u1"), "left_semi"),
-      books, simK, k)
-    (base.join(affected, Seq("user_id"), "left_anti").unionAll(rebuilt),
-      newCooc, newRatings)
-  }
+      simK: Int = 20, k: Int = 3): (DataFrame, DataFrame, DataFrame) =
+    LocalPlans.overLocalInputs(base, oldCooc, oldRatings, deltaEvents, books) {
+      case Seq(base, oldCooc, oldRatings, deltaEvents, books) =>
+        val (newCooc, newRatings) =
+          RatingsGraph.mergeCooccurrence(oldCooc, oldRatings, deltaEvents)
+        val deltaUsers = deltaEvents.filter(col("rating") =!= 0)
+          .select(col("user_id")).distinct()
+        val affected = LocalPlans.localCheckpoint(deltaUsers
+          .unionAll(newCooc
+            .join(deltaUsers.select(col("user_id").as("u2")), Seq("u2"), "left_semi")
+            .select(col("u1").as("user_id")))
+          .distinct())
+        val rebuilt = recommendationsPayload(newRatings,
+          newCooc.join(affected.select(col("user_id").as("u1")), Seq("u1"), "left_semi"),
+          books, simK, k)
+        (base.join(affected, Seq("user_id"), "left_anti").unionAll(rebuilt),
+          newCooc, newRatings)
+    }
 
   /** Point lookup against [[recommendationsTable]]: the recommend_books
     * serving story. Same legs as [[userBooksLookup]]. */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.graph.RatingsGraph
 import graft.olap.Skew
 import graft.sources.GraphStore
 
@@ -294,17 +295,39 @@ class ScaleToolsSpec extends AnyFunSuite {
     }
   }
 
-  test("cache: application-end eviction drops this context's entries (rebuild on next ask)") {
+  test("cache: eviction refuses a live context, keeps every entry") {
+    val s = spark.newSession()
     var builds = 0
-    def probe() = Cache.cached(spark, "cache-evict-spec", "probe") {
-      builds += 1; Seq(1L).toDF("x")
+    def probe() = Cache.cached(s, "cache-evict-spec", "probe") {
+      builds += 1; Seq(1L).toDF("x").groupBy("x").count()
     }
-    probe(); probe()
-    assert(builds == 1, "second ask should hit the cache")
-    Cache.evictContext(spark.sparkContext) // what onApplicationEnd runs
-    probe()
-    assert(builds == 2, "eviction should force a rebuild")
-    Cache.clear(spark)
+    try {
+      probe(); probe()
+      assert(builds == 1, "second ask should hit the cache")
+      val silver = RatingsGraph.ratings(spark, sf)
+      // what onApplicationEnd runs, on a context that has not stopped
+      intercept[IllegalArgumentException](Cache.evictContext(spark.sparkContext))
+      probe()
+      assert(builds == 1, "a refused eviction dropped an entry")
+      assert(RatingsGraph.ratings(spark, sf) eq silver, "the shared session's silver was dropped")
+    } finally Cache.clear(s)
+  }
+
+  test("cache: a refused eviction then another session's clear keeps the shared silver cached") {
+    // the order-dependent failure this guards: eviction emptied the store
+    // without unpersisting, and the next clear of any session then found
+    // no holder for the shared silver and unpersisted it under the plans
+    // of the shared session
+    val silver = RatingsGraph.ratings(spark, sf)
+    def isCached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    assert(isCached(silver))
+    intercept[IllegalArgumentException](Cache.evictContext(spark.sparkContext))
+    val other = spark.newSession()
+    RatingsGraph.ratings(other, sf).count()
+    Cache.clear(other)
+    assert(isCached(silver), "clearing another session uncached the shared silver")
+    assert(RatingsGraph.ratings(spark, sf) eq silver)
   }
 
   test("cache: clearing one session keeps another live session's identical frame cached") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.TopKPerKey
+import graft.plans.{DriverLocalExec, TopKPerKey}
 
 class TopKPerKeySpec extends AnyFunSuite {
   import TestSpark._
@@ -59,5 +59,20 @@ class TopKPerKeySpec extends AnyFunSuite {
         Seq(("score", false), ("id", true)), 2)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got == Set(10L, 11L))
+  }
+
+  test("k <= 0 keeps no row, through the distributed operator and the driver route") {
+    val rows = Seq((1L, 2L, 0.5), (1L, 3L, 0.9), (2L, 1L, 0.4))
+    val off = spark.newSession()
+    off.conf.set("graft.driver.localThreshold", "0")
+    for (k <- Seq(0, -1)) {
+      val driver = TopKPerKey.topKPerKey(rows.toDF("a", "b", "c"), Seq("a"), Seq(("c", false)), k)
+      val dist = TopKPerKey.topKPerKey(off.createDataFrame(rows).toDF("a", "b", "c"),
+        Seq("a"), Seq(("c", false)), k)
+      assert(driver.queryExecution.executedPlan.isInstanceOf[DriverLocalExec])
+      assert(!dist.queryExecution.executedPlan.toString.contains("DriverLocal"))
+      assert(driver.collect().isEmpty, s"top-$k on the driver route kept rows")
+      assert(dist.collect().isEmpty, s"top-$k on the distributed operator kept rows")
+    }
   }
 }
