@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memoization of shared derived tables (ratings edges,
@@ -123,10 +122,10 @@ object Cache {
       // them would add a job to fill the cache and one per later action;
       // any other plan over local frames that the driver route runs is
       // computed there once and kept the same way
-      df = GraftBridge.localRelation(built)
-        .map(GraftBridge.ofRows(spark, _))
-        .orElse(graft.plans.LocalPlans.materialize(built))
-        .getOrElse(built.persist(StorageLevel.MEMORY_AND_DISK))
+      df = graft.plans.LocalPlans.materialize(built).getOrElse {
+        if (built.storageLevel == StorageLevel.NONE) built.persist(StorageLevel.MEMORY_AND_DISK)
+        else built
+      }
       val prev = store.putIfAbsent(key, df)
       if (prev != null) { df.unpersist(); df = prev }
     }

@@ -1,7 +1,9 @@
 package graft.graph
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
@@ -92,34 +94,42 @@ object Algorithms {
     * positive). A frame that already folds into a LocalRelation is taken
     * as it is; all the others come in by ONE bounded collect: each is
     * wrapped as a struct in its own slot of a union, and one task reads
-    * the union until `cap` + 1 rows. */
-  private[graft] def driverFrames(dfs: Seq[DataFrame], cap: Long): Option[Seq[DataFrame]] = {
+    * the union until `cap` + 1 rows (none when every leaf is local and
+    * `graft.plans.LocalPlans` runs the union on the driver). */
+  private[graft] def driverFrames(dfs: Seq[DataFrame], cap: Long): Option[Seq[DataFrame]] =
+    driverData(dfs, cap).map(_.zip(dfs).map { case (rows, df) =>
+      if (GraftBridge.localRelation(df).isDefined) df
+      else GraftBridge.localFrame(df.sparkSession, df.schema, rows)
+    })
+
+  /** [[driverFrames]]' rows: Catalyst's internal rows of each frame, in
+    * its column order. A leg that reads them as they are skips the
+    * analysis of a frame over them, whose every rule pass walks the rows. */
+  private[graft] def driverData(dfs: Seq[DataFrame], cap: Long): Option[Seq[Seq[InternalRow]]] = {
     if (cap <= 0) return None
     val local = dfs.map(GraftBridge.localRelation)
     val remote = dfs.indices.filter(local(_).isEmpty)
     val localRows = local.flatten.map(_.data.size.toLong).sum
     if (localRows > cap) return None
-    val fetched = if (remote.isEmpty) Array.empty[Row] else {
+    val fetched = if (remote.isEmpty) Array.empty[InternalRow] else {
+      // an all-local input is computed on the driver, with no job
+      graft.plans.LocalPlans.ensureStrategy(dfs.head.sparkSession)
       val slots = remote.map(dfs(_).schema)
-      remote.zipWithIndex.map { case (i, j) =>
+      val union = remote.zipWithIndex.map { case (i, j) =>
         dfs(i).select(lit(j).as("slot") +: slots.indices.map { k =>
           (if (k == j) struct(col("*")) else lit(null).cast(slots(k))).as(s"s$k")
         }: _*)
       }.reduce(_ unionAll _)
-        .coalesce(1).limit(math.min(cap - localRows + 1, Int.MaxValue.toLong).toInt).collect()
+        .coalesce(1).limit(math.min(cap - localRows + 1, Int.MaxValue.toLong).toInt)
+      GraftBridge.collectInternal(union)
     }
     if (localRows + fetched.length > cap) return None
     val bySlot = fetched.groupBy(_.getInt(0))
     Some(dfs.indices.map { i =>
       val j = remote.indexOf(i)
-      if (j < 0) dfs(i)
-      else {
-        val schema = dfs(i).schema
-        val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
-        GraftBridge.localFrame(dfs(i).sparkSession, schema,
-          bySlot.getOrElse(j, Array.empty[Row]).toSeq
-            .map(r => toInternal(r.getStruct(j + 1)).asInstanceOf[InternalRow]))
-      }
+      if (j < 0) local(i).get.data
+      else ArraySeq.unsafeWrapArray(bySlot.getOrElse(j, Array.empty[InternalRow])
+        .map(_.getStruct(j + 1, dfs(i).schema.length)))
     })
   }
 

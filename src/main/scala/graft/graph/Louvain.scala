@@ -1,12 +1,18 @@
 package graft.graph
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-/** Louvain community detection (Blondel et al. 2008), DataFrame-native —
-  * the faithful counterpart of the reference's `gds.louvain.write`
+/** Louvain community detection (Blondel et al. 2008) — the faithful
+  * counterpart of the reference's `gds.louvain.write`
   * (`algorithms/Alg_Community_Detection.py:40-45`).
   *
   * Each level: synchronous modularity-gain local moving (every node
@@ -14,10 +20,18 @@ import org.apache.spark.storage.StorageLevel
   * strictly-positive gain, smallest community id on ties), then the
   * graph is coarsened by community and the next level runs on the
   * community graph; final labels unfold through the levels.
+  * Deterministic: no RNG, fixed sweep counts, total tie orders.
   *
-  * All steps are joins + aggregations keyed on node/community id —
-  * linear in |E| per sweep, no driver-side graph state, deterministic
-  * (no RNG, fixed sweep counts, total tie orders).
+  * Two legs with identical rows and schemas. While the grouped edges
+  * (plus a warm start's seed labels) hold at most
+  * `Algorithms.driverGate` rows (`graft.driver.localThreshold`), their
+  * weights are integral and their ids integral and non-null, every level
+  * runs on the driver over arrays: one aggregation that measures them
+  * and one bounded collect, no job when the edges are already a local
+  * frame, and the result is a local frame.
+  * Otherwise every step is joins + aggregations keyed on node/community
+  * id — linear in |E| per sweep — until a coarsened level falls under
+  * the gate: its remaining levels run on the driver the same way.
   */
 object Louvain {
 
@@ -50,39 +64,11 @@ object Louvain {
   private def localMoving(edges: DataFrame, sweeps: Int,
       init: Option[DataFrame] = None): DataFrame = {
     val eBase = edges.select(col("src"), col("dst"), col("weight").cast("double"))
-    // ONE stats pass: 2m, row count and weight-integrality together
-    // (each was its own job before the r13 driver leg reshuffle)
-    val statsRow = eBase.agg(sum(col("weight")), count(lit(1)),
-      sum(when(col("weight") =!= floor(col("weight")), 1L).otherwise(0L))).head()
+    val statsRow = eBase.agg(sum(col("weight"))).head()
     if (statsRow.isNullAt(0)) { // empty edge list: nothing to label
       return eBase.select(col("src").as("node_id"), col("src").as("comm"))
     }
     val m2 = statsRow.getDouble(0) // = 2m
-    val nEdgeRows = statsRow.getLong(1)
-    val integral = statsRow.getLong(2) == 0L
-    // r13 driver leg (the k1Coloring simulate-the-rounds precedent,
-    // same 5 M-edge gate): under the gate AND with INTEGER-VALUED
-    // weights, every order-dependent float in the sweep algebra is an
-    // exact integer (w_nc, k, σ_tot are sums of integral doubles; the
-    // gains are products/differences of identical operands), so a
-    // driver simulation of the sweeps is bit-identical to the
-    // distributed parity sweeps — and ~12 sweeps × 5 driver-blocking
-    // jobs on label-sized frames were pure scheduling overhead
-    // (probe: 16.5 s wall, 167 stages, the #2 silver). Non-integral
-    // weights (where sum ORDER matters) always take the distributed
-    // path; the gate-forced spec pins the fallback row-identical.
-    if (nEdgeRows <= Algorithms.driverGate(eBase.sparkSession, Algorithms.DriverGateDefault) && integral) {
-      val rows = eBase.collect()
-      val initMap = init.map { l0 =>
-        val m = new scala.collection.mutable.LongMap[Long]()
-        l0.select(col("node_id"), col("comm")).collect()
-          .foreach(r => m(r.getLong(0)) = r.getLong(1))
-        m
-      }
-      val out = Louvain.localMovingDriver(rows, sweeps, initMap, m2)
-      import eBase.sparkSession.implicits._
-      return out.toSeq.toDF("node_id", "comm")
-    }
     // pre-partition on dst: the per-sweep edge⋈labels join then only
     // shuffles the (tiny) labels side
     val e = eBase
@@ -222,75 +208,74 @@ object Louvain {
     labels.select(col("node_id"), col("comm"))
   }
 
-  /** Driver simulation of [[localMoving]]'s parity sweeps — same
-    * PRE-sweep-state scoring, same gain algebra
-    * (w_nc·2m − k·σ_adj on identical double operands), same
-    * (gain desc, cand asc) argmax, same left-join apply semantics
-    * (edges to a node that never appears as src drop from the votes
-    * exactly like the inner labels join), same two-zero-move exit.
-    * Bit-identical to the distributed path for integer-valued weights
-    * (the caller gates on that); spec-pinned by R13GateForcedSpec and
-    * the unchanged DuckDB oracles. */
-  private[graph] def localMovingDriver(
-      rows: Array[org.apache.spark.sql.Row], sweeps: Int,
-      init: Option[scala.collection.mutable.LongMap[Long]],
-      m2: Double): Seq[(Long, Long)] = {
-    val n = rows.length
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    val ids = scala.collection.mutable.ArrayBuffer[Long]()
+  /** Driver simulation of [[localMoving]]'s parity sweeps over one
+    * level's edges (parallel arrays) — same PRE-sweep-state scoring, same
+    * gain algebra (w_nc·2m − k·σ_adj on identical double operands), same
+    * (gain desc, cand asc) argmax, same parity classes (`pmod(id, 2)`),
+    * same left-join apply semantics (edges to a node that never appears
+    * as src drop from the votes exactly like the inner labels join),
+    * same two-zero-move exit. Bit-identical to the distributed path for
+    * integer-valued weights (the caller gates on that). Returns the
+    * label of every src node; `init` seeds them (absent = singleton).
+    * None when a (src, dst) pair repeats (input passed as grouped but
+    * not): the distributed first sweep would score each row on its own. */
+  private def localMovingDriver(src: Array[Long], dst: Array[Long],
+      ws: Array[Double], sweeps: Int, init: mutable.LongMap[Long]): Option[mutable.LongMap[Long]] = {
+    val n = src.length
+    val idx = new mutable.LongMap[Int]()
+    val ids = mutable.ArrayBuffer[Long]()
     var i = 0
     while (i < n) {
-      val s = rows(i).getLong(0)
+      val s = src(i)
       if (!idx.contains(s)) { idx(s) = ids.length; ids += s }
       i += 1
     }
     val nV = ids.length
     val offs = new Array[Int](nV + 1)
     i = 0
-    while (i < n) { offs(idx(rows(i).getLong(0)) + 1) += 1; i += 1 }
+    while (i < n) { offs(idx(src(i)) + 1) += 1; i += 1 }
     i = 0
     while (i < nV) { offs(i + 1) += offs(i); i += 1 }
     val pos = java.util.Arrays.copyOf(offs, nV)
     val dsts = new Array[Long](n)
-    val ws = new Array[Double](n)
+    val wAt = new Array[Double](n)
     val k = new Array[Double](nV)
+    var m2 = 0.0
     i = 0
     while (i < n) {
-      val r = rows(i)
-      val u = idx(r.getLong(0))
-      val w = r.getDouble(2)
-      dsts(pos(u)) = r.getLong(1)
-      ws(pos(u)) = w
+      val u = idx(src(i))
+      dsts(pos(u)) = dst(i)
+      wAt(pos(u)) = ws(i)
       pos(u) += 1
-      k(u) += w
+      k(u) += ws(i)
+      m2 += ws(i)
       i += 1
     }
-    val comm = new Array[Long](nV)
+    val sorted = java.util.Arrays.copyOf(dsts, n)
     i = 0
     while (i < nV) {
-      comm(i) = init match {
-        case Some(m) => m.getOrElse(ids(i), ids(i))
-        case None => ids(i)
-      }
+      java.util.Arrays.sort(sorted, offs(i), offs(i + 1))
+      var j = offs(i) + 1
+      while (j < offs(i + 1)) { if (sorted(j) == sorted(j - 1)) return None; j += 1 }
       i += 1
     }
+    val comm = Array.tabulate(nV)(v => init.getOrElse(ids(v), ids(v)))
     var sweep = 1
     var zeroMoveSweeps = 0
-    val wnc = new scala.collection.mutable.LongMap[Double]()
+    val wnc = new mutable.LongMap[Double]()
     while (sweep <= sweeps && zeroMoveSweeps < 2) {
       val parity = sweep % 2
-      val sigma = new scala.collection.mutable.LongMap[Double]()
+      val sigma = new mutable.LongMap[Double]()
       i = 0
       while (i < nV) {
         sigma(comm(i)) = sigma.getOrElse(comm(i), 0.0) + k(i)
         i += 1
       }
-      var nMoves = 0L
-      val moveIdx = scala.collection.mutable.ArrayBuffer[Int]()
-      val moveTo = scala.collection.mutable.ArrayBuffer[Long]()
+      val moveIdx = mutable.ArrayBuffer[Int]()
+      val moveTo = mutable.ArrayBuffer[Long]()
       var u = 0
       while (u < nV) {
-        if (ids(u) % 2 == parity) {
+        if (Math.floorMod(ids(u), 2L) == parity) {
           wnc.clear()
           wnc(comm(u)) = 0.0 // the zero self-vote: "stay" always scores
           var j = offs(u)
@@ -300,7 +285,7 @@ object Louvain {
             if (d != ids(u)) idx.get(d) match {
               case Some(di) =>
                 val c = comm(di)
-                wnc(c) = wnc.getOrElse(c, 0.0) + ws(j)
+                wnc(c) = wnc.getOrElse(c, 0.0) + wAt(j)
               case None => () // unlabeled dst: inner-join drop
             }
             j += 1
@@ -321,13 +306,23 @@ object Louvain {
         }
         u += 1
       }
-      nMoves = moveIdx.length.toLong
       i = 0
       while (i < moveIdx.length) { comm(moveIdx(i)) = moveTo(i); i += 1 }
-      if (nMoves == 0L) zeroMoveSweeps += 1 else zeroMoveSweeps = 0
+      if (moveIdx.isEmpty) zeroMoveSweeps += 1 else zeroMoveSweeps = 0
       sweep += 1
     }
-    ids.toSeq.zip(comm.toSeq)
+    val out = new mutable.LongMap[Long](nV)
+    i = 0
+    while (i < nV) { out(ids(i)) = comm(i); i += 1 }
+    Some(out)
+  }
+
+  /** The positive edges, one row per (src, dst) unless `assumeGrouped`. */
+  private def groupedEdges(edges: DataFrame, assumeGrouped: Boolean): DataFrame = {
+    val positive = edges.select(col("src"), col("dst"), col("weight").cast("double"))
+      .filter(col("weight") > 0.0)
+    if (assumeGrouped) positive
+    else positive.groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
   }
 
   /** Full Louvain: `levels` rounds of local moving + coarsening.
@@ -343,27 +338,183 @@ object Louvain {
     * per user pair by definition of its groupBy). */
   def louvain(edges: DataFrame, levels: Int = 2, sweeps: Int = 6,
               assumeGrouped: Boolean = false): DataFrame = {
-    val positive = edges.select(col("src"), col("dst"), col("weight").cast("double"))
-      .filter(col("weight") > 0.0)
-    var currentEdges =
-      if (assumeGrouped) positive
-      else positive.groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
+    val grouped = groupedEdges(edges, assumeGrouped)
+    louvainLocal(grouped, levels, sweeps, None) match {
+      case Right(labels) => labels
+      case Left(coarsenable) => louvainDistributed(grouped, levels, sweeps, coarsenable)
+    }
+  }
+
+  /** Every level on the driver (see the object doc), or Left when the
+    * input is over the gate, the gate is 0, a weight is not integral, a
+    * (src, dst) pair repeats, or an id is null, not integral or (in
+    * `seed`) repeated: those run the distributed leg. Left(true) when a
+    * coarsened level may still come under the gate and be well-formed
+    * (the refusal was the size, a null id or a repeated pair). Integral
+    * weights make every sum in the sweep algebra (w_nc, k, σ_tot, 2m)
+    * exact, so the driver's summation order cannot change a gain. `seed`
+    * (node_id, comm) seeds level 0's labels.
+    * Coarsening keeps self-loops and drops an edge with an unlabelled
+    * endpoint, as the inner joins do; the level mappings compose by the
+    * left-join-and-coalesce rule. The frame carries the distributed
+    * leg's schema. */
+  private def louvainLocal(grouped: DataFrame, levels: Int, sweeps: Int,
+      seed: Option[DataFrame]): Either[Boolean, DataFrame] = {
+    val spark = grouped.sparkSession
+    val gate = Algorithms.driverGate(spark, Algorithms.DriverGateDefault)
+    val id = grouped.schema("src")
+    if (gate <= 0 || levels < 1 || !Algorithms.integral(id.dataType) ||
+        grouped.schema("dst").dataType != id.dataType ||
+        !seed.forall(_.schema.forall(f => Algorithms.integral(f.dataType)))) return Left(false)
+    // a distributed input is measured first by one aggregation, so a size
+    // over the gate or a fractional weight is refused before any collect
+    // (an all-local one comes in with no job, see Algorithms.driverData)
+    if (!GraftBridge.logicalPlan(grouped).collectLeaves().forall(_.isInstanceOf[LocalRelation])) {
+      val stats = grouped.agg(count(lit(1)),
+        max(when(col("weight") =!= floor(col("weight")), 1).otherwise(0))).head()
+      if (stats.getLong(0) > gate) return Left(true)
+      if (!stats.isNullAt(1) && stats.getInt(1) == 1) return Left(false)
+    }
+    // (src, dst, weight) and (node_id, comm), as Catalyst holds them
+    val data = Algorithms.driverData(grouped +: seed.toSeq, gate).getOrElse(return Left(true))
+    val rows = data.head
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return Left(true)
+    def longAt(t: DataType): (InternalRow, Int) => Long = t match {
+      case ByteType => _.getByte(_)
+      case ShortType => _.getShort(_)
+      case IntegerType => _.getInt(_)
+      case _ => _.getLong(_)
+    }
+    val idAt = longAt(id.dataType)
+    var src = rows.iterator.map(idAt(_, 0)).toArray
+    var dst = rows.iterator.map(idAt(_, 1)).toArray
+    var ws = rows.iterator.map(_.getDouble(2)).toArray
+    // Spark's integrality test, `weight = floor(weight)` with floor a long
+    if (ws.exists(w => w != Math.floor(w).toLong.toDouble)) return Left(false)
+    val init = new mutable.LongMap[Long]()
+    for (s <- seed; (nodeAt, commAt) = (longAt(s.schema(0).dataType), longAt(s.schema(1).dataType));
+         r <- data(1) if !r.isNullAt(0)) {
+      if (init.contains(nodeAt(r, 0))) return Left(false)
+      // a null label falls back to the singleton, as the coalesce does
+      if (!r.isNullAt(1)) init(nodeAt(r, 0)) = commAt(r, 1)
+    }
+    var mapping: mutable.LongMap[Long] = null
+    for (level <- 0 until levels) {
+      val labels = localMovingDriver(src, dst, ws, sweeps,
+        if (level == 0) init else mutable.LongMap.empty).getOrElse(return Left(true))
+      if (mapping == null) mapping = labels
+      else mapping.mapValuesInPlace((_, mid) => labels.getOrElse(mid, mid))
+      if (level < levels - 1) {
+        val (cs, cd, cw) = coarsen(src, dst, ws, labels)
+        src = cs
+        dst = cd
+        ws = cw
+      }
+    }
+    val least = new mutable.LongMap[Long]()
+    mapping.foreachEntry((node, c) => least(c) = math.min(least.getOrElse(c, node), node))
+    val toId: Long => Any = id.dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val out = mapping.keys.toArray.sorted.map(v => InternalRow(toId(v), toId(least(mapping(v)))))
+    Right(GraftBridge.localFrame(spark, StructType(Seq(
+        StructField("node_id", id.dataType, id.nullable),
+        StructField("community", id.dataType, nullable = true))),
+      ArraySeq.unsafeWrapArray(out)))
+  }
+
+  /** One level's edges summed per (label(src), label(dst)), self-loops
+    * kept and an edge with an unlabelled endpoint dropped, as the
+    * coarsening joins do: a counting sort on the src label, then one pass
+    * per bucket that sums into one slot per dst label. Weights are
+    * integral, so the summation order changes no sum. */
+  private def coarsen(src: Array[Long], dst: Array[Long], ws: Array[Double],
+      labels: mutable.LongMap[Long]): (Array[Long], Array[Long], Array[Double]) = {
+    val slotOf = new mutable.LongMap[Int]()
+    val comms = mutable.ArrayBuffer[Long]()
+    labels.foreachValue(c => if (!slotOf.contains(c)) { slotOf(c) = comms.length; comms += c })
+    val nC = comms.length
+    def slot(node: Long): Int = labels.get(node).fold(-1)(slotOf(_))
+    val n = src.length
+    val (a, b) = (new Array[Int](n), new Array[Int](n))
+    val offs = new Array[Int](nC + 1)
+    var i = 0
+    while (i < n) {
+      a(i) = slot(src(i))
+      b(i) = slot(dst(i))
+      if (a(i) < 0 || b(i) < 0) a(i) = -1 else offs(a(i) + 1) += 1
+      i += 1
+    }
+    i = 0
+    while (i < nC) { offs(i + 1) += offs(i); i += 1 }
+    val kept = offs(nC)
+    val order = new Array[Int](kept)
+    val pos = java.util.Arrays.copyOf(offs, nC)
+    i = 0
+    while (i < n) {
+      if (a(i) >= 0) { order(pos(a(i))) = i; pos(a(i)) += 1 }
+      i += 1
+    }
+    val (cs, cd, cw) = (new Array[Long](kept), new Array[Long](kept), new Array[Double](kept))
+    // the output row of (the current src label, b), valid while seen(b)
+    // holds the current src label's slot
+    val (seen, at) = (Array.fill(nC)(-1), new Array[Int](nC))
+    var out = 0
+    var ca = 0
+    while (ca < nC) {
+      var j = offs(ca)
+      while (j < offs(ca + 1)) {
+        val e = order(j)
+        val cb = b(e)
+        if (seen(cb) == ca) cw(at(cb)) += ws(e)
+        else {
+          seen(cb) = ca
+          at(cb) = out
+          cs(out) = comms(ca)
+          cd(out) = comms(cb)
+          cw(out) = ws(e)
+          out += 1
+        }
+        j += 1
+      }
+      ca += 1
+    }
+    (java.util.Arrays.copyOf(cs, out), java.util.Arrays.copyOf(cd, out), java.util.Arrays.copyOf(cw, out))
+  }
+
+  /** [[louvain]]'s distributed leg: local moving and coarsening as joins
+    * and aggregations, one checkpoint per level. Once a coarsened level
+    * falls under the gate, its remaining levels run on the driver (tried
+    * only when `coarsenable`). */
+  private def louvainDistributed(grouped: DataFrame, levels: Int, sweeps: Int,
+      coarsenable: Boolean): DataFrame = {
+    var currentEdges = grouped
     // (empty input needs no upfront action: localMoving's null-safe m2
     // probe returns the empty labels frame and everything composes)
     // mapping from original node to current-level node
     var mapping: DataFrame = null
+    // LEFT join + coalesce: a level-0 community with no inter-community
+    // edges never appears in the coarsened graph and gets no higher-level
+    // label — it must keep its own label, not vanish (GDS labels every
+    // projected node)
+    def compose(labels: DataFrame): DataFrame = mapping.select(col("node_id"), col("comm").as("mid"))
+      .join(labels.select(col("node_id").as("mid"), col("comm")), Seq("mid"), "left")
+      .select(col("node_id"), coalesce(col("comm"), col("mid")).as("comm"))
+    var tryDriver = coarsenable
     for (level <- 0 until levels) {
+      if (level > 0 && tryDriver) louvainLocal(currentEdges, levels - level, sweeps, None) match {
+        // the driver leg's labels are the least member of each community
+        // of this level's nodes: the same partition, and finishLabels
+        // renames it by the least original member either way
+        case Right(rest) => return finishLabels(compose(rest.withColumnRenamed("community", "comm")))
+        case Left(retry) => tryDriver = retry
+      }
       val labels = localMoving(currentEdges, sweeps)
-      mapping =
-        if (mapping == null) labels.select(col("node_id"), col("comm"))
-        else mapping.select(col("node_id"), col("comm").as("mid"))
-          // LEFT join + coalesce: a level-0 community with no
-          // inter-community edges never appears in the coarsened graph
-          // and gets no higher-level label — it must keep its own label,
-          // not vanish (GDS labels every projected node)
-          .join(labels.select(col("node_id").as("mid"), col("comm")), Seq("mid"), "left")
-          .select(col("node_id"), coalesce(col("comm"), col("mid")).as("comm"))
-      mapping = mapping.localCheckpoint()
+      mapping = (if (mapping == null) labels.select(col("node_id"), col("comm"))
+        else compose(labels)).localCheckpoint()
       if (level < levels - 1) {
         // coarsen: one node per community, aggregated weights — KEEPING
         // self-loops (intra-community weight): Blondel et al. carry them,
@@ -397,16 +548,14 @@ object Louvain {
     * re-clustering the corpus; like GDS's seedProperty warm start, the
     * result is a valid greedy-modularity labelling but not necessarily
     * the one a cold run would pick. Labels stay canonical
-    * (min member id). */
+    * (min member id). Under the driver gate it is one level of the
+    * driver leg, seeded with `prevLabels`. */
   def louvainWarmStart(edges: DataFrame, prevLabels: DataFrame,
       sweeps: Int = 2, assumeGrouped: Boolean = false): DataFrame = {
-    val positive = edges.select(col("src"), col("dst"), col("weight").cast("double"))
-      .filter(col("weight") > 0.0)
-    val grouped =
-      if (assumeGrouped) positive
-      else positive.groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
-    finishLabels(localMoving(grouped, sweeps,
-      Some(prevLabels.select(col("node_id"), col("community").as("comm")))))
+    val grouped = groupedEdges(edges, assumeGrouped)
+    val seed = prevLabels.select(col("node_id"), col("community").as("comm"))
+    louvainLocal(grouped, 1, sweeps, Some(seed))
+      .getOrElse(finishLabels(localMoving(grouped, sweeps, Some(seed))))
   }
 
   /** Canonicalise community labels to the minimum member node id. */

@@ -2,6 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.storage.StorageLevel
 
 import graft.plans.LocalPlans
 
@@ -64,7 +66,9 @@ object RatingsGraph {
 
   /** The RATED edge table: MERGE-dedup per (user, book), keep max rating.
     * Reference `data/load_data.py:48-61` (MERGE + SET r.rating).
-    * Session-cached: ~20 downstream queries reuse it. */
+    * Session-cached: ~20 downstream queries reuse it. The rebuilt table
+    * is held on the driver while it is small (see [[onDriver]]); a
+    * silver table is read as it is, for its bucketed plans. */
   def ratings(spark: SparkSession, dir: String): DataFrame = {
     val silver = spark.conf.getOption(SilverTableConf)
     // fail fast on a typo'd conf: a silent fallback to the rebuild ETL
@@ -77,11 +81,51 @@ object RatingsGraph {
       silver match {
         case Some(t) => spark.table(t)
         case None =>
-          filteredEvents(spark, dir)
+          onDriver(filteredEvents(spark, dir)
             .groupBy(col("user_id"), col("book_id"))
-            .agg(max(col("rating")).as("rating"))
+            .agg(max(col("rating")).as("rating")))
       }
     }
+  }
+
+  /** Share of the driver gate that the ratings silver's self-joins may
+    * reach while it is held on the driver. The route runs Spark's
+    * operators interpreted on one thread, and graph kernels iterate over
+    * the co-rating projection, so the bound sits between two measured
+    * sizes (4 cores): at sf0.001 (self-joins of at most 0.19 M rows) the
+    * held silver cut perfbench `reco`'s cold build by a fifth, at sf0.01
+    * (1.5 M and 2.2 M rows) it doubled `graft.Verify`'s total time. */
+  private val HeldSelfJoinShare = 10
+
+  /** `built`, persisted, as a local frame with its schema while the plans
+    * over it stay small: its self-join on user_id and on book_id (Σ over
+    * the key's values of its rows squared; the co-rating projections are
+    * such joins, and each bounds the silver's own size) hold at most
+    * 1/[[HeldSelfJoinShare]] of `graft.driver.localThreshold` rows. One
+    * count fills the cache and refuses a silver with more rows than that;
+    * one bounded collect then reads the cache, and the self-joins are
+    * measured on the collected rows. The route (`graft.plans.LocalPlans`)
+    * runs the plans over the local frame on the driver. Otherwise the
+    * persisted frame is returned, cache filled; at 0 nothing runs. The
+    * cache entry is dropped only when this call made it: Spark caches by
+    * plan, and another session may hold the same one. */
+  private def onDriver(built: DataFrame): DataFrame = {
+    val spark = built.sparkSession
+    val made = !GraftBridge.isCached(built)
+    val persisted = built.persist(StorageLevel.MEMORY_AND_DISK)
+    val bound = Algorithms.driverGate(spark, Algorithms.DriverGateDefault) / HeldSelfJoinShare
+    if (bound <= 0 || persisted.count() > bound) return persisted
+    val rows = Algorithms.driverData(Seq(persisted), bound).map(_.head).getOrElse(return persisted)
+    def selfJoin(key: String): Long = {
+      val (at, t) = (persisted.schema.fieldIndex(key), persisted.schema(key).dataType)
+      val counts = new scala.collection.mutable.HashMap[Any, Long]()
+      // a null key joins nothing
+      rows.foreach(r => if (!r.isNullAt(at)) counts(r.get(at, t)) = counts.getOrElse(r.get(at, t), 0L) + 1)
+      counts.valuesIterator.map(c => c * c).sum
+    }
+    if (selfJoin("user_id") > bound || selfJoin("book_id") > bound) return persisted
+    if (made) persisted.unpersist(blocking = false)
+    GraftBridge.localFrame(spark, persisted.schema, rows)
   }
 
   /** Users that appear in the filtered ratings (reference

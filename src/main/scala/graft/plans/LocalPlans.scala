@@ -17,6 +17,7 @@ import org.apache.spark.sql.execution.{CoalesceExec, LeafExecNode, SparkPlan, Sp
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.ObjectType
 
 import graft.graph.Algorithms
 
@@ -29,6 +30,7 @@ import graft.graph.Algorithms
   *    `Seq.toDF`, a materialised fold input);
   *  - the leaves hold at most `Algorithms.driverGate` rows in all
   *    (`graft.driver.localThreshold`; 0 turns the route off);
+  *  - its output is rows, not JVM objects;
   *  - the result cannot depend on the partition layout: no
   *    nondeterministic expression (`rand`, `monotonically_increasing_id`,
   *    `spark_partition_id`, `first`…), no sample, no shuffling
@@ -56,6 +58,9 @@ object LocalPlans {
   /** Whether the route runs `plan` on the driver under `gate` rows. */
   private[graft] def fires(plan: LogicalPlan, gate: Long): Boolean = plan match {
     case _: LocalRelation => false
+    // JVM objects (`Dataset.rdd`, typed operators) are not rows: their
+    // producer runs over a fired child instead
+    case _ if plan.output.exists(_.dataType.isInstanceOf[ObjectType]) => false
     case _ =>
       val leaves = plan.collectLeaves()
       gate > 0 && leaves.forall {
@@ -85,19 +90,24 @@ object LocalPlans {
     }
   }
 
-  /** `df` computed on the driver and held as a local frame, when the
-    * route runs its plan: no Spark job. None otherwise. The probe plans a
-    * copy of `df`, so `df`'s own execution (and a later `persist`) is
-    * untouched. */
+  /** `df` held as a local frame with no Spark job, when its plan folds
+    * into a `LocalRelation` (a local frame, or a projection or filter of
+    * one) or the route runs it on the driver. None otherwise. The probe
+    * plans a copy of `df`, so `df`'s own execution (and a later
+    * `persist`) is untouched. */
   def materialize(df: DataFrame): Option[DataFrame] = {
     val spark = df.sparkSession
-    val analyzed = GraftBridge.logicalPlan(df)
-    if (!analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) return None
-    ensureStrategy(spark)
-    GraftBridge.ofRows(spark, analyzed).queryExecution.executedPlan match {
-      case d: DriverLocalExec =>
-        Some(GraftBridge.localFrame(spark, df.schema, ArraySeq.unsafeWrapArray(d.executeCollect())))
-      case _ => None
+    GraftBridge.localRelation(df).map(GraftBridge.ofRows(spark, _)).orElse {
+      val analyzed = GraftBridge.logicalPlan(df)
+      if (!analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+      else {
+        ensureStrategy(spark)
+        GraftBridge.ofRows(spark, analyzed).queryExecution.executedPlan match {
+          case d: DriverLocalExec => Some(GraftBridge.localFrame(spark, df.schema,
+            ArraySeq.unsafeWrapArray(d.executeCollect())))
+          case _ => None
+        }
+      }
     }
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.Dataset
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.graftbridge.Preparations
 import org.apache.spark.sql.types.StructType
 
@@ -44,6 +44,19 @@ object GraftBridge {
       case l: LocalRelation if l.schema == df.schema => Some(l)
       case _ => None
     }
+
+  /** `df`'s rows as Catalyst's internal values, collected as `collect`
+    * does (one SQL execution, the same jobs) without converting each one
+    * to a `Row`. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = castToImpl(df).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** Whether Spark's cache holds `df`'s plan (from any session: the
+    * cache is keyed by plan). */
+  def isCached(df: DataFrame): Boolean =
+    castToImpl(df.sparkSession).sharedState.cacheManager.lookupCachedData(castToImpl(df)).isDefined
 
   /** Session-catalog existence check without the analyzer pass that
     * `spark.catalog.tableExists` runs on every call — serving lookups

@@ -13,6 +13,24 @@ object TestSpark {
     .getOrCreate()
   val sf = "/root/testdata/sf0.001"
 
+  /** Same schema (nullability included) and rows in any order, or the
+    * same error: the leg identity the driver-leg specs check. */
+  def sameResult(name: String, a: => org.apache.spark.sql.DataFrame,
+      b: => org.apache.spark.sql.DataFrame): Unit = {
+    import org.scalatest.Assertions._
+    def run(df: => org.apache.spark.sql.DataFrame) =
+      try Right((df.schema, df.collect().map(_.toString).sorted.toSeq))
+      catch { case e: Exception => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+    val (ra, rb) = (run(a), run(b))
+    (ra, rb) match {
+      case (Right((sa, xa)), Right((sb, xb))) =>
+        assert(sa == sb, s"$name: schema ${sa.treeString} vs ${sb.treeString}")
+        assert(xa == xb, s"$name: ${xa.size} vs ${xb.size} rows, first differences " +
+          xa.diff(xb).take(3) + " / " + xb.diff(xa).take(3))
+      case _ => assert(ra == rb, s"$name: the legs disagree")
+    }
+  }
+
   /** `body`'s value and the Spark jobs it started, counted once a marker
     * job reaches the listener: the listener bus is FIFO, so by then
     * every job `body` could have started has been seen. */

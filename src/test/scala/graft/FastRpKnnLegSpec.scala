@@ -33,23 +33,6 @@ class FastRpKnnLegSpec extends AnyFunSuite {
     try body(ss) finally ss.foreach(Cache.clear)
   }
 
-  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
-
-  /** Same schema (nullability included) and rows, or the same error. */
-  private def sameResult(name: String, a: => DataFrame, b: => DataFrame): Unit = {
-    def run(df: => DataFrame) =
-      try Right((df.schema, rows(df)))
-      catch { case e: Exception => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-    val (ra, rb) = (run(a), run(b))
-    (ra, rb) match {
-      case (Right((sa, xa)), Right((sb, xb))) =>
-        assert(sa == sb, s"$name: schema ${sa.treeString} vs ${sb.treeString}")
-        assert(xa == xb, s"$name: ${xa.size} vs ${xb.size} rows, first differences " +
-          xa.diff(xb).take(3) + " / " + xb.diff(xa).take(3))
-      case _ => assert(ra == rb, s"$name: the legs disagree")
-    }
-  }
-
   /** Every FastRP/KNN frame the reference build reads, across two sessions. */
   private def sameFrames(d: SparkSession, f: SparkSession, dir: String): Unit = {
     val (ed, ef) = (FastRP.embedStates(Algorithms.bipartiteEdges(d, dir)),

@@ -219,6 +219,42 @@ class LocalPlanSpec extends AnyFunSuite {
     } finally Cache.clear(s)
   }
 
+  test("materialize and localCheckpoint of a frame that folds into a local relation run no job") {
+    val s = session(None)
+    try {
+      val books = localOf(s, RatingsGraph.ratedBooks(spark, sf).select("book_id", "title"))
+      Seq("projection" -> books.select(col("title"), (col("book_id") + 1).as("next")),
+          "filter" -> books.filter(col("book_id") % 3 === 0)).foreach { case (name, df) =>
+        val ((held, checkpointed), jobs) = jobsDuring {
+          val held = LocalPlans.materialize(df)
+          val checkpointed = LocalPlans.localCheckpoint(df)
+          (held.map(h => (h.schema, rows(h, ordered = false))),
+            (checkpointed.schema, rows(checkpointed, ordered = false)))
+        }
+        assert(jobs == 0, s"$name ran $jobs jobs")
+        val want = (df.schema, rows(df, ordered = false))
+        assert(held.contains(want), s"$name: materialize")
+        assert(checkpointed == want, s"$name: localCheckpoint")
+        assert(want._2.nonEmpty)
+      }
+    } finally Cache.clear(s)
+  }
+
+  test("object-producing plans over local frames (rdd, typed map) answer as default planning") {
+    val (on, off) = (session(None), session(Some(0L)))
+    try {
+      def both(f: DataFrame => Seq[String]) = {
+        val Seq(a, b) = Seq(on, off).map(s => f(locals(s)("cooc").filter(col("weight") > 1)))
+        assert(a.nonEmpty && a == b)
+      }
+      both(_.rdd.map(r => s"${r.get(0)}-${r.get(1)}").collect().sorted.toSeq)
+      both { df =>
+        import df.sparkSession.implicits._
+        df.map(r => s"${r.get(1)}:${r.getLong(2) * 2}").collect().sorted.toSeq
+      }
+    } finally Seq(on, off).foreach(Cache.clear)
+  }
+
   test("layout-dependent plans keep the default path") {
     val s = session(None)
     try {

@@ -19,7 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *                                       CC, the driver-built ANN
   *                                       IVF/PQ index, the driver
   *                                       FastRP states, LSH scored
-  *                                       pairs and KNN top-k)
+  *                                       pairs and KNN top-k, the
+  *                                       ratings silver held on the
+  *                                       driver, whole Louvain on the
+  *                                       driver)
   *   graft.dedup.clusters.localThreshold=0 (closure UF)
   *   graft.node2vec.adjBroadcastEdges=0 (CSR/adjacency broadcast draw)
   *   graft.dbscan.exactPointsThreshold=0 (LSH-banded eps pairs)
@@ -51,7 +54,8 @@ class R13GateForcedSpec extends AnyFunSuite {
     "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
     "ivf_invariants", "pq_invariants", "ivfpq_invariants",
     "fastrp_norms", "knn_similar_edges", "knn_similar_edges_ref",
-    "knn_edges_invariants", "gds_knn_write", "recommend_knn_embedding")
+    "knn_edges_invariants", "gds_knn_write", "recommend_knn_embedding",
+    "gds_louvain_write", "gds_leiden_write", "louvain_invariants")
 
   private def runAll(confs: Seq[(String, String)]): Map[String, Seq[String]] = {
     val s = spark.newSession()

@@ -295,6 +295,17 @@ class ScaleToolsSpec extends AnyFunSuite {
     }
   }
 
+  /** A silver that stays persisted under the default driver gate (the
+    * ratings silver is held on the driver there): a parquet projection
+    * no other test caches. */
+  private def sharedSilver(s: org.apache.spark.sql.SparkSession) =
+    Cache.cached(s, sf, "shared-silver-probe") {
+      Tables.embeddings(s, sf).select("vec_id").filter(col("vec_id") % 2 === 0)
+    }
+
+  private def isCached(df: org.apache.spark.sql.DataFrame) =
+    org.apache.spark.sql.graftbridge.GraftBridge.isCached(df)
+
   test("cache: eviction refuses a live context, keeps every entry") {
     val s = spark.newSession()
     var builds = 0
@@ -304,12 +315,12 @@ class ScaleToolsSpec extends AnyFunSuite {
     try {
       probe(); probe()
       assert(builds == 1, "second ask should hit the cache")
-      val silver = RatingsGraph.ratings(spark, sf)
+      val silver = sharedSilver(spark)
       // what onApplicationEnd runs, on a context that has not stopped
       intercept[IllegalArgumentException](Cache.evictContext(spark.sparkContext))
       probe()
       assert(builds == 1, "a refused eviction dropped an entry")
-      assert(RatingsGraph.ratings(spark, sf) eq silver, "the shared session's silver was dropped")
+      assert(sharedSilver(spark) eq silver, "the shared session's silver was dropped")
     } finally Cache.clear(s)
   }
 
@@ -318,16 +329,55 @@ class ScaleToolsSpec extends AnyFunSuite {
     // without unpersisting, and the next clear of any session then found
     // no holder for the shared silver and unpersisted it under the plans
     // of the shared session
-    val silver = RatingsGraph.ratings(spark, sf)
-    def isCached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    val silver = sharedSilver(spark)
     assert(isCached(silver))
     intercept[IllegalArgumentException](Cache.evictContext(spark.sparkContext))
     val other = spark.newSession()
-    RatingsGraph.ratings(other, sf).count()
+    sharedSilver(other).count()
     Cache.clear(other)
     assert(isCached(silver), "clearing another session uncached the shared silver")
-    assert(RatingsGraph.ratings(spark, sf) eq silver)
+    assert(sharedSilver(spark) eq silver)
+  }
+
+  test("ratings silver: a local relation under the gate, persisted at gate 0 and in silver-table mode") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val held = RatingsGraph.ratings(spark, sf)
+    assert(held.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(!isCached(held))
+    val forced = spark.newSession()
+    forced.conf.set("graft.driver.localThreshold", "0")
+    val table = "graft_silver_held_spec"
+    val silverMode = spark.newSession()
+    try {
+      val persisted = RatingsGraph.ratings(forced, sf)
+      assert(!persisted.queryExecution.analyzed.isInstanceOf[LocalRelation])
+      assert(isCached(persisted), "the gate-0 ratings silver is not persisted")
+      assert(persisted.schema == held.schema)
+      assert(persisted.collect().map(_.toString).sorted.toSeq ==
+        held.collect().map(_.toString).sorted.toSeq)
+      GraphStore.saveBucketed(silverMode, sf, table, buckets = 4)
+      silverMode.conf.set(RatingsGraph.SilverTableConf, table)
+      val bucketed = RatingsGraph.ratings(silverMode, sf)
+      assert(!bucketed.queryExecution.analyzed.isInstanceOf[LocalRelation])
+      assert(isCached(bucketed), "the silver-table ratings are not persisted")
+    } finally {
+      Seq(forced, silverMode).foreach(Cache.clear)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+  }
+
+  test("ratings silver: holding it on the driver keeps a live gate-0 session's silver cached") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // Spark caches by plan: both sessions build the same ratings plan, and
+    // the gate-0 session's persist made the one cache entry
+    val (forced, held) = (spark.newSession(), spark.newSession())
+    forced.conf.set("graft.driver.localThreshold", "0")
+    try {
+      val persisted = RatingsGraph.ratings(forced, sf)
+      assert(isCached(persisted))
+      assert(RatingsGraph.ratings(held, sf).queryExecution.analyzed.isInstanceOf[LocalRelation])
+      assert(isCached(persisted), "holding the silver on the driver uncached the gate-0 session's")
+    } finally Seq(forced, held).foreach(Cache.clear)
   }
 
   test("cache: clearing one session keeps another live session's identical frame cached") {
@@ -336,8 +386,6 @@ class ScaleToolsSpec extends AnyFunSuite {
     def probe(s: org.apache.spark.sql.SparkSession) =
       Cache.cached(s, sf, "cross-session-probe") { Tables.embeddings(s, sf).select("vec_id") }
     val (fa, fb) = (probe(a), probe(b))
-    def isCached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
     assert(isCached(fa))
     Cache.clear(a)
     assert(isCached(fb), "clearing session a uncached session b's frame")
