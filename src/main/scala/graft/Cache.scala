@@ -90,17 +90,20 @@ object Cache {
     * the frame cache: [[clear]] and the application-end listener purge
     * the session's side entries too, so a long-lived JVM cycling
     * sessions doesn't grow them unboundedly. */
-  private val sideMaps =
-    new java.util.concurrent.CopyOnWriteArrayList[ConcurrentHashMap[String, _]]()
+  private val evictors =
+    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
 
   def registerSideMap(m: ConcurrentHashMap[String, _]): Unit =
-    sideMaps.add(m): Unit
+    registerEvictor(prefix => m.keySet().removeIf(_.startsWith(prefix)): Unit)
+
+  /** Side-state that is not one map (the serving snapshots' per-session
+    * frames) registers how to drop the entries whose keys start with a
+    * `sessionId|` prefix. */
+  def registerEvictor(evict: String => Unit): Unit =
+    evictors.add(evict): Unit
 
   private def evictSideMaps(prefix: String): Unit =
-    sideMaps.forEach { m =>
-      val it = m.keySet().iterator()
-      while (it.hasNext) if (it.next().startsWith(prefix)) it.remove()
-    }
+    evictors.forEach(_(prefix))
 
   def cached(spark: org.apache.spark.sql.SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame = {

@@ -71,9 +71,11 @@ object Algorithms {
     * `graft.driver.localThreshold` forces all size-adaptive driver
     * legs at once (0 = always take the distributed fallback), so a
     * gate-forced sweep can prove the at-scale shapes stay
-    * hash-identical without touching call sites. */
+    * hash-identical without touching call sites. Read with a null
+    * default: `getOption` on an unset key builds and catches an exception,
+    * which a serving lookup would pay on every call. */
   private[graft] def driverGate(spark: SparkSession, default: Long): Long =
-    spark.conf.getOption("graft.driver.localThreshold")
+    Option(spark.conf.get("graft.driver.localThreshold", null))
       .map(_.toLong).getOrElse(default)
 
   /** The default size every driver leg is gated at (rows, edges, pairs
@@ -1548,8 +1550,9 @@ object Algorithms {
     * IS [[dijkstraPath]] over the ban-filtered edge frame (bans are
     * ≤ k·rounds literal predicates — pushed-down filters, not joins),
     * so the 100 TB leg reuses the audited distributed relaxation
-    * unchanged (its step dists arrive 1e-6-rounded; the driver leg is
-    * exact — legs agree to rounding).
+    * unchanged. Both legs carry exact cumulative doubles (the same
+    * `dist + len` sums under the same tie-break), so a spur's costs add
+    * to its root's unrounded and the output rounds once.
     *
     * Output: (path_rank, step, node_id, path_cost) — path_cost is the
     * path's total, repeated on its rows, rounded once at 1e-6. Fewer
@@ -1716,13 +1719,9 @@ object Algorithms {
             }
             // cursors alive past the hop bound = parent cycle: no path
             cursor.foreach { case (sid, _) => chains.remove(sid): Unit }
-            // step dists 1e-6-rounded exactly as dijkstraPath emits them
-            // (the documented legs-agree-to-rounding contract)
             specs.flatMap { s =>
               if (doneS(s.sid)) chains.get(s.sid).map { ch =>
-                s.sid -> ((ch.toSeq.map(_._1), ch.toSeq.map(t =>
-                  BigDecimal(t._2).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-                    .toDouble)))
+                s.sid -> ((ch.toSeq.map(_._1), ch.toSeq.map(_._2)))
               } else None
             }.toMap
           }
@@ -1730,9 +1729,8 @@ object Algorithms {
       }
     val paths = yensLoop(source, k, rounds, bfBatch)
     // step_cost = the cumulative cost AT each step (GDS's per-step
-    // `costs` array, exploded): driver-leg cums are exact doubles, the
-    // distributed leg's are already 1e-6-rounded — the single output
-    // ROUND makes both legs emit identical values
+    // `costs` array, exploded), rounded once here: rounding a spur's
+    // cums before they add to the root's can move the 6th decimal
     paths.zipWithIndex.flatMap { case ((p, cum), rank) =>
       p.zipWithIndex.map { case (node, step) =>
         (rank.toLong, step.toLong, node, cum(step), cum.last)

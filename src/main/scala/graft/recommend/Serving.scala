@@ -31,6 +31,21 @@ import graft.plans.LocalPlans
   * per-user map of rows. Each lookup returns one user's rows as a local
   * relation with the table's schema.
   *
+  * Frame memo (snapshot leg only): a snapshot keeps the frame it built
+  * for each (caller session, user), keyed by `graft.Cache.sessionId`, and
+  * a repeated lookup returns that same frame. Its `collect()` then pays
+  * only Spark's per-action bookkeeping: the frame was analysed,
+  * optimised and planned, its Row encoder bound and its scan's rows
+  * projected once, by the first action on it. The memo lives and dies
+  * with its snapshot, so a dropped and rebuilt table (new catalog
+  * createTime) starts from no frames; `graft.Cache.clear(session)` drops
+  * that session's frames and [[evictContext]] drops them all. At most
+  * [[MaxFramesPerSnapshot]] frames are held per snapshot; past that, a
+  * lookup builds a fresh frame as an unmemoised one would. Two lookups
+  * of one user in one session therefore return the same frame (Spark's
+  * self-join and self-union handling applies when they meet in one
+  * plan); lookups of different users get different attribute ids.
+  *
   * Bucketed leg (over the gate, or the gate forced to 0 — the at-scale
   * shape): a point lookup
   *
@@ -54,8 +69,11 @@ object Serving {
     * persist in spark-warehouse/ — tag the name with the source dir so
     * two SFs in one suite never read each other's buckets. */
   private def tag(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    tags.computeIfAbsent(dir, d => java.security.MessageDigest.getInstance("MD5")
+      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString)
+
+  /** dir → its tag: computed once, a lookup names its table every call */
+  private val tags = new ConcurrentHashMap[String, String]()
 
   /** A previous JVM's warehouse files can survive without catalog
     * metadata (in-memory catalog dies with the session); CTAS then
@@ -66,6 +84,15 @@ object Serving {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path)) fs.delete(path, true): Unit
   }
+
+  /** `table`'s catalog createTime, after `write` builds it when the
+    * catalog has no table of that name: one catalog read per call. */
+  private def servingTable(spark: SparkSession, table: String)(write: => Unit): Long =
+    GraftBridge.tableCreateTime(spark, table).getOrElse {
+      dropOrphanedLocation(spark, table)
+      write
+      GraftBridge.tableCreateTime(spark, table).get
+    }
 
   /** The user-books serving payload from any (ratings, books) pair —
     * shared by the full table build and the incremental merge. */
@@ -78,18 +105,20 @@ object Serving {
     * (title, rating), bucketed+sorted by user_id. Built once per
     * session; SaveMode.Overwrite clears any stale files a previous JVM
     * left in the warehouse dir. */
-  def userBooksTable(spark: SparkSession, dir: String, buckets: Int = 8): String = {
+  def userBooksTable(spark: SparkSession, dir: String, buckets: Int = 8): String =
+    userBooks(spark, dir, buckets)._1
+
+  /** [[userBooksTable]]'s name and catalog createTime. */
+  private def userBooks(spark: SparkSession, dir: String, buckets: Int): (String, Long) = {
     // parameters live in the name: a same-session call with different
     // buckets must build its own table, not silently serve the old one
     val t = s"graft_serve_books_${tag(dir)}_$buckets"
-    if (!GraftBridge.tableExists(spark, t)) {
-      dropOrphanedLocation(spark, t)
+    (t, servingTable(spark, t) {
       userBooksPayload(RatingsGraph.ratings(spark, dir),
           RatingsGraph.ratedBooks(spark, dir))
         .write.bucketBy(buckets, "user_id").sortBy("user_id")
         .format("parquet").mode(SaveMode.Overwrite).saveAsTable(t)
-    }
-    t
+    })
   }
 
   /** The planner's DisableUnnecessaryBucketedScan rule turns the
@@ -147,6 +176,23 @@ object Serving {
   /** Snapshot builds in this JVM (the spec's single-flight probe). */
   private[graft] val snapshotBuilds = new AtomicLong()
 
+  /** Lookup frames built in this JVM by the snapshot leg, memoised or
+    * not (the spec's memo probe). */
+  private[graft] val frameBuilds = new AtomicLong()
+
+  /** The most lookup frames one snapshot holds. A held frame (its plans
+    * and their planning tracker, bound encoder and projected scan rows)
+    * measured about 100 KB of heap at sf0.01 (3 000 frames of both tables
+    * held 308 MB), so a full memo costs about 50 MB per table; past the
+    * bound, lookups still answer, each with a fresh frame. */
+  private[graft] val MaxFramesPerSnapshot = 512
+
+  // Cache.clear(session) (and application end) drops the session's frames
+  graft.Cache.registerEvictor { prefix =>
+    val states = servingStates.synchronized(new java.util.ArrayList(servingStates.values()))
+    states.forEach(_.snapshots.values().forEach(_.dropFrames(prefix)))
+  }
+
   /** A driver-local, read-only copy of one serving table as created at
     * `createTime`. The lazy vals are single-flight: concurrent first
     * lookups wait on the one count and the one build, and a failed
@@ -175,30 +221,50 @@ object Serving {
       }
     }
 
-    /** One user's rows in lookup order, under fresh attribute ids (two
-      * lookups may meet in one plan). */
-    def lookup(spark: SparkSession, user: Long): DataFrame =
+    /** Built frames by `sessionId|user`. */
+    private val frames = new ConcurrentHashMap[String, DataFrame]()
+
+    private def frame(spark: SparkSession, user: Long): DataFrame = {
+      frameBuilds.incrementAndGet()
       GraftBridge.localFrame(spark, schema,
         ArraySeq.unsafeWrapArray(byUser.getOrElse(user, Array.empty[InternalRow])))
+    }
+
+    /** One user's rows in lookup order: the frame this snapshot built for
+      * the caller's session and `user`, built now (single-flight) on a
+      * miss while fewer than [[MaxFramesPerSnapshot]] are held. */
+    def lookup(spark: SparkSession, user: Long): DataFrame = {
+      val key = s"${graft.Cache.sessionId(spark)}|$user"
+      val held = frames.get(key)
+      if (held != null) held
+      else if (frames.size >= MaxFramesPerSnapshot) frame(spark, user)
+      else frames.computeIfAbsent(key, _ => frame(spark, user))
+    }
+
+    /** Drops the frames whose keys start with `prefix` (one session's). */
+    def dropFrames(prefix: String): Unit =
+      frames.keySet().removeIf(_.startsWith(prefix)): Unit
   }
 
   /** A point lookup: one user's `payload` columns in `order`. Answered
     * from the table's snapshot while the table's row count is under the
     * driver gate, else by the bucketed one-bucket scan. */
-  private def lookup(spark: SparkSession, table: String, payload: Seq[String],
-      order: Seq[Column], user: Long): DataFrame = {
+  private def lookup(spark: SparkSession, table: String, created: Long,
+      payload: Seq[String], order: Seq[Column], user: Long): DataFrame = {
     val state = servingState(spark)
     // keyed by (context, table, createTime): a dropped and rebuilt table
     // is never served from the old snapshot
-    val created = GraftBridge.tableCreateTime(spark, table)
-    val snapshot = state.snapshots.compute(table, (_, old) =>
-      if (old != null && old.createTime == created) old
-      else {
-        // the pinned session's relation cache still lists the dropped
-        // table's files
-        if (old != null) state.session.catalog.refreshTable(table)
-        new Snapshot(state.session, table, created, payload, order)
-      })
+    val current = state.snapshots.get(table)
+    val snapshot =
+      if (current != null && current.createTime == created) current
+      else state.snapshots.compute(table, (_, old) =>
+        if (old != null && old.createTime == created) old
+        else {
+          // the pinned session's relation cache still lists the dropped
+          // table's files
+          if (old != null) state.session.catalog.refreshTable(table)
+          new Snapshot(state.session, table, created, payload, order)
+        })
     val gate = Algorithms.driverGate(spark, Algorithms.DriverGateDefault)
     if (gate > 0 && snapshot.rows <= gate) snapshot.lookup(spark, user)
     else state.session.table(table)
@@ -210,10 +276,14 @@ object Serving {
   /** Point lookup against [[userBooksTable]]: the get_user_rated_books
     * serving story. */
   def userBooksLookup(spark: SparkSession, dir: String,
-      user: Long = Recommend.TargetUser): DataFrame =
+      user: Long = Recommend.TargetUser): DataFrame = {
     // the table is built (if needed) on the caller's session
-    lookup(spark, userBooksTable(spark, dir), Seq("book_id", "title", "rating"),
-      Seq(col("rating").desc, col("book_id")), user)
+    val (table, created) = userBooks(spark, dir, 8)
+    lookup(spark, table, created, BooksPayload, BooksOrder, user)
+  }
+
+  private val BooksPayload = Seq("book_id", "title", "rating")
+  private val BooksOrder = Seq(col("rating").desc, col("book_id"))
 
   /** The all-user recommendation payload from any (ratings, cooc,
     * books) state — the batch precompute behind interactive
@@ -243,18 +313,21 @@ object Serving {
   }
 
   def recommendationsTable(spark: SparkSession, dir: String, simK: Int = 20,
-      k: Int = 3, buckets: Int = 8): String = {
+      k: Int = 3, buckets: Int = 8): String =
+    recommendations(spark, dir, simK, k, buckets)._1
+
+  /** [[recommendationsTable]]'s name and catalog createTime. */
+  private def recommendations(spark: SparkSession, dir: String, simK: Int, k: Int,
+      buckets: Int): (String, Long) = {
     // parameters live in the name (see userBooksTable)
     val t = s"graft_serve_recs_${tag(dir)}_${simK}_${k}_$buckets"
-    if (!GraftBridge.tableExists(spark, t)) {
-      dropOrphanedLocation(spark, t)
+    (t, servingTable(spark, t) {
       recommendationsPayload(RatingsGraph.ratings(spark, dir),
           RatingsGraph.cooccurrenceEdges(spark, dir),
           RatingsGraph.ratedBooks(spark, dir), simK, k)
         .write.bucketBy(buckets, "user_id").sortBy("user_id")
         .format("parquet").mode(SaveMode.Overwrite).saveAsTable(t)
-    }
-    t
+    })
   }
 
   /** Incremental maintenance of the user-books serving payload (T8's
@@ -324,8 +397,11 @@ object Serving {
   /** Point lookup against [[recommendationsTable]]: the recommend_books
     * serving story. Same legs as [[userBooksLookup]]. */
   def recommendationsLookup(spark: SparkSession, dir: String,
-      user: Long = Recommend.TargetUser): DataFrame =
-    lookup(spark, recommendationsTable(spark, dir),
-      Seq("book_id", "title", "avg_rating", "votes"),
-      Seq(col("avg_rating").desc, col("votes").desc, col("book_id")), user)
+      user: Long = Recommend.TargetUser): DataFrame = {
+    val (table, created) = recommendations(spark, dir, 20, 3, 8)
+    lookup(spark, table, created, RecsPayload, RecsOrder, user)
+  }
+
+  private val RecsPayload = Seq("book_id", "title", "avg_rating", "votes")
+  private val RecsOrder = Seq(col("avg_rating").desc, col("votes").desc, col("book_id"))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -58,17 +59,16 @@ object GraftBridge {
   def isCached(df: DataFrame): Boolean =
     castToImpl(df.sparkSession).sharedState.cacheManager.lookupCachedData(castToImpl(df)).isDefined
 
-  /** Session-catalog existence check without the analyzer pass that
-    * `spark.catalog.tableExists` runs on every call — serving lookups
-    * check once per request. */
-  def tableExists(spark: SparkSession, table: String): Boolean =
-    castToImpl(spark).sessionState.catalog.tableExists(TableIdentifier(table))
-
-  /** Catalog creation time (epoch ms) of a session-catalog table: a
-    * dropped and rebuilt table of the same name gets a new one. */
-  def tableCreateTime(spark: SparkSession, table: String): Long =
-    castToImpl(spark).sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).createTime
+  /** Catalog creation time (epoch ms) of a session-catalog table, None
+    * when there is no such table: a dropped and rebuilt table of the same
+    * name gets a new one. One catalog read, with no analyzer pass (as
+    * `spark.catalog.tableExists` runs) and no schema copy (as
+    * `getTableMetadata` makes): serving lookups read it once per
+    * request. */
+  def tableCreateTime(spark: SparkSession, table: String): Option[Long] =
+    try Some(castToImpl(spark).sessionState.catalog
+      .getTableRawMetadata(TableIdentifier(table)).createTime)
+    catch { case _: NoSuchTableException => None }
 
   /** Physical planning of `plan` in the active session, as
     * `QueryExecution` does it: the planner's strategies, then the

@@ -1327,6 +1327,24 @@ class NewOpsSpec extends AnyFunSuite {
     assert(all.map(_._3) == all.map(_._3).sorted, "costs must be nondecreasing")
   }
 
+  test("yensPaths: both legs add exact spur costs to the root's, rounded once") {
+    // 1/3 and 1 are the lengths the cooc graph's 1/weight gives. A[0] is
+    // [1,2,3,4] (cost 1); the spur at 2 adds 2→5→4 (4/3) to the root's
+    // 1/3, so A[1] costs 5/3, which rounds to 1.666667: rounding the
+    // spur's and the root's cums first gives 0.333333 + 1.333333
+    val third = 1.0 / 3
+    val edges = Seq((1L, 2L, third), (2L, 3L, third), (3L, 4L, third), (2L, 5L, 1.0),
+      (5L, 4L, third), (3L, 5L, 1.0), (1L, 5L, 1.5)).toDF("src", "dst", "len")
+    val driver = Algorithms.yensPaths(edges, 1L, 4L, k = 4).collect().toSeq
+    val dist = Algorithms.yensPaths(edges, 1L, 4L, k = 4, driverLimit = 0L).collect().toSeq
+    assert(dist == driver, s"legs disagree: $dist vs $driver")
+    val costs = driver.map(r => r.getLong(0) -> r.getDouble(3)).distinct.sortBy(_._1).map(_._2)
+    assert(costs == Seq(1.0, 1.666667, 1.833333, 2.0), s"path costs $costs")
+    assert(costs == costs.sorted, "costs must be nondecreasing")
+    assert(driver.filter(_.getLong(0) == 1L).map(_.getDouble(4)) ==
+      Seq(0.0, 0.333333, 1.333333, 1.666667))
+  }
+
   test("alsGate: ALS recovers the planted rank-1 signal on the sf0.001 mask") {
     val row = graft.recommend.Als.alsGate(spark, sf).collect().head
     val (nTrain, nTest) = (row.getLong(0), row.getLong(1))

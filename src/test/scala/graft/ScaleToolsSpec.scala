@@ -167,21 +167,128 @@ class ScaleToolsSpec extends AnyFunSuite {
     Serving.userBooksLookup(spark, sf, u).collect()
     assert(Serving.snapshotBuilds.get == built, "a warm lookup rebuilt the snapshot")
     Serving.evictContext(spark.sparkContext) // what onApplicationEnd runs
+    val frames = Serving.frameBuilds.get
     val threads = 8
     val barrier = new CyclicBarrier(threads)
     val pool = Executors.newFixedThreadPool(threads)
     try {
-      val futures = (1 to threads).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-        def call(): Seq[String] = {
+      val futures = (1 to threads).map(_ => pool.submit(
+          new java.util.concurrent.Callable[(org.apache.spark.sql.DataFrame, Seq[String])] {
+        def call(): (org.apache.spark.sql.DataFrame, Seq[String]) = {
           barrier.await()
-          Serving.userBooksLookup(spark, sf, u).collect().map(_.toString).toSeq
+          val df = Serving.userBooksLookup(spark, sf, u)
+          (df, df.collect().map(_.toString).toSeq)
         }
       }))
-      val rows = futures.map(_.get(300, TimeUnit.SECONDS))
+      val (dfs, rows) = futures.map(_.get(300, TimeUnit.SECONDS)).unzip
       assert(Serving.snapshotBuilds.get == built + 1,
         s"${Serving.snapshotBuilds.get - built} builds after eviction, expected exactly 1")
       assert(rows.distinct.size == 1 && rows.head.nonEmpty, "threads saw different rows")
+      assert(Serving.frameBuilds.get == frames + 1 && dfs.forall(_ eq dfs.head),
+        s"${Serving.frameBuilds.get - frames} frames built for one user, expected exactly 1")
     } finally pool.shutdownNow(): Unit
+  }
+
+  /** A planner strategy that plans nothing and counts the plans offered
+    * to it: a frame whose plans are built already offers none. */
+  private final class PlanCounter extends org.apache.spark.sql.execution.SparkStrategy {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = { calls.incrementAndGet(); Nil }
+  }
+
+  test("serving frame memo: a warm repeat runs no job, builds no frame and plans nothing; rows ≡ the online queries") {
+    import graft.recommend.{Recommend, Serving}
+    gateForcedSession() // the tables, built on the default session
+    val s = spark.newSession()
+    val counter = new PlanCounter
+    s.experimental.extraStrategies = Seq(counter)
+    try {
+      val users = sampleUsers(5)
+      def page(u: Long) = (Serving.userBooksLookup(s, sf, u), Serving.recommendationsLookup(s, sf, u))
+      val first = users.map { u => val p = page(u); p._1.collect(); p._2.collect(); p }
+      val (frames, planned) = (Serving.frameBuilds.get, counter.calls.get)
+      val (warm, jobs) = jobsDuring {
+        users.map { u => val p = page(u); (p, p._1.collect().toSeq, p._2.collect().toSeq) }
+      }
+      assert(jobs == 0, s"warm lookups ran $jobs Spark jobs")
+      assert(Serving.frameBuilds.get == frames, "a warm lookup built a frame")
+      assert(counter.calls.get == planned, "a warm lookup planned")
+      users.zip(first).zip(warm).foreach { case ((u, (b0, r0)), ((b, r), books, recs)) =>
+        assert((b eq b0) && (r eq r0), s"user $u: a warm lookup returned a new frame")
+        assert(books == Recommend.userRatedBooks(spark, sf, u).collect().toSeq,
+          s"user $u: memoised books != online query")
+        assert(recs == Recommend.recommendKnn(spark, sf, u).collect().toSeq,
+          s"user $u: memoised recommendations != online query")
+      }
+    } finally Cache.clear(s)
+  }
+
+  test("serving frame memo: no session gets another session's frame, a gate-0 one included") {
+    import graft.recommend.Serving
+    val forced = gateForcedSession()
+    val other = spark.newSession()
+    try {
+      val u = sampleUsers(1).head
+      val frames = Seq(spark, other, forced).map(Serving.userBooksLookup(_, sf, u))
+      Seq(spark, other).zip(frames).foreach { case (s, df) =>
+        assert(df.sparkSession eq s, "a lookup returned a frame of another session")
+        assert(Serving.userBooksLookup(s, sf, u) eq df)
+      }
+      assert(frames.combinations(2).forall { case Seq(a, b) => a ne b })
+      // the gate-0 session reads the bucketed table, never a held frame
+      assert(frames(2).queryExecution.executedPlan.toString
+        .contains("SelectedBucketsCount: 1 out of"))
+      assert(Serving.userBooksLookup(forced, sf, u) ne frames(2))
+      assert(frames.map(_.collect().toSeq).distinct.size == 1, "sessions saw different rows")
+    } finally Cache.clear(other)
+  }
+
+  test("serving frame memo: Cache.clear drops only its session's frames, evictContext drops all") {
+    import graft.recommend.Serving
+    val (a, b) = (spark.newSession(), spark.newSession())
+    try {
+      val u = sampleUsers(1).head
+      val (fa, fb) = (Serving.userBooksLookup(a, sf, u), Serving.userBooksLookup(b, sf, u))
+      Cache.clear(a)
+      val built = Serving.frameBuilds.get
+      assert(Serving.userBooksLookup(b, sf, u) eq fb, "clearing one session dropped another's frame")
+      val fa2 = Serving.userBooksLookup(a, sf, u)
+      assert((fa2 ne fa) && Serving.frameBuilds.get == built + 1,
+        "the cleared session was served its dropped frame")
+      Serving.evictContext(spark.sparkContext)
+      assert((Serving.userBooksLookup(a, sf, u) ne fa2) && (Serving.userBooksLookup(b, sf, u) ne fb),
+        "a frame outlived its context's eviction")
+      assert(Serving.frameBuilds.get == built + 3)
+    } finally { Cache.clear(a); Cache.clear(b) }
+  }
+
+  test("serving frame memo: past the bound, lookups build fresh frames that still answer correctly") {
+    import graft.recommend.{Recommend, Serving}
+    val s = spark.newSession()
+    try {
+      // users with no ratings fill the memo with empty frames
+      (1 to Serving.MaxFramesPerSnapshot).foreach(i => Serving.userBooksLookup(s, sf, -i.toLong))
+      val u = sampleUsers(1).head
+      val built = Serving.frameBuilds.get
+      val (x, y) = (Serving.userBooksLookup(s, sf, u), Serving.userBooksLookup(s, sf, u))
+      assert((x ne y) && Serving.frameBuilds.get == built + 2, "a lookup past the bound was held")
+      val online = Recommend.userRatedBooks(spark, sf, u).collect().toSeq
+      assert(x.collect().toSeq == online && y.collect().toSeq == online)
+    } finally Cache.clear(s)
+  }
+
+  test("serving frame memo: lookups still union and USING-join in one plan, one user's two lookups included") {
+    import graft.recommend.{Recommend, Serving}
+    val Seq(u1, u2) = sampleUsers(2)
+    val (a, b) = (Serving.userBooksLookup(spark, sf, u1), Serving.userBooksLookup(spark, sf, u2))
+    val again = Serving.userBooksLookup(spark, sf, u1)
+    assert(again eq a, "one user's two lookups built two frames")
+    val (oa, ob) = (Recommend.userRatedBooks(spark, sf, u1), Recommend.userRatedBooks(spark, sf, u2))
+    sameResult("two users' union", a.union(b), oa.union(ob))
+    sameResult("two users' join", a.join(b, Seq("book_id")), oa.join(ob, Seq("book_id")))
+    sameResult("one user's union", a.union(again), oa.union(oa))
+    sameResult("one user's join", a.join(again, Seq("book_id")), oa.join(oa, Seq("book_id")))
   }
 
   test("coRatedPairStats maxFanout: capped pairs subset, generous cap exact, stats sufficient") {
