@@ -105,10 +105,7 @@ object SparkEntry {
     "gds_louvain_write" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_louvain_write") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("userSimilarityGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "userSimilarityGraph")
         g.louvainWrite("userSimilarityGraph",
           precomputedLabels = Some(graft.graph.Louvain.userCommunities(s, d)))
         g.db.nodes("User").filter(col("community").isNotNull)
@@ -165,10 +162,7 @@ object SparkEntry {
     "gds_ppr_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_ppr_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("pprGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "pprGraph")
         g.pageRankStream("pprGraph", maxIterations = 5,
             relationshipWeightProperty = Some("weight"),
             sourceNodes = Seq(1L, 2L, 3L))
@@ -219,10 +213,7 @@ object SparkEntry {
     "gds_leiden_write" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_leiden_write") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("leidenGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "leidenGraph")
         g.leidenWrite("leidenGraph",
           precomputedLabels = Some(
             graft.graph.Louvain.userCommunitiesLeiden(s, d)))
@@ -233,10 +224,7 @@ object SparkEntry {
     "gds_kcore_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_kcore_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("kcoreGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "kcoreGraph")
         // survivors only: the kcore_members oracle lists the core, and
         // stream-mode's 0-valued excluded nodes are the complement
         g.kcoreStream("kcoreGraph", k = 10,
@@ -253,10 +241,7 @@ object SparkEntry {
     "gds_kcoredec_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_kcoredec_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("kcoreDecGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "kcoreDecGraph")
         g.kcoreDecompositionStream("kcoreDecGraph",
             precomputed = Some(graft.graph.Algorithms.userCoreNumbers(s, d)))
           .select(col("nodeId").as("node_id"),
@@ -266,10 +251,7 @@ object SparkEntry {
     "gds_sllpa_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_sllpa_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("sllpaGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "sllpaGraph")
         g.sllpaStream("sllpaGraph",
             precomputed = Some(graft.graph.Sllpa.userSllpa(s, d)))
           .select(col("nodeId").as("node_id"),
@@ -279,10 +261,7 @@ object SparkEntry {
     "gds_modopt_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_modopt_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("modoptGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "modoptGraph")
         g.modularityOptimizationStream("modoptGraph",
             precomputedLabels = Some(
               graft.graph.Algorithms.userModOptCommunities(s, d)
@@ -310,10 +289,7 @@ object SparkEntry {
     "gds_node2vec_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_node2vec_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("n2vGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "n2vGraph")
         g.node2vecStream("n2vGraph",
             precomputed = Some(graft.graph.Node2Vec.userEmbeddings(s, d)
               .withColumnRenamed("user_id", "node_id")))
@@ -355,10 +331,7 @@ object SparkEntry {
     "gds_maxkcut_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_maxkcut_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("maxkcutGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "maxkcutGraph")
         g.maxKCutStream("maxkcutGraph",
             precomputed = Some(graft.graph.Algorithms.userMaxKCut(s, d)))
           .select(col("nodeId").as("node_id"), col("communityId").as("cls"))
@@ -367,10 +340,7 @@ object SparkEntry {
     "gds_influence_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_influence_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("celfGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "celfGraph")
         g.influenceMaximizationStream("celfGraph",
             precomputed = Some(graft.graph.Influence.userInfluenceSeeds(s, d)))
           .select(col("rank").as("seed_rank"), col("nodeId").as("node_id"),
@@ -401,10 +371,7 @@ object SparkEntry {
     "gds_hashgnn_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_hashgnn_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("hashgnnGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "hashgnnGraph")
         g.hashGnnStream("hashgnnGraph",
             precomputed = Some(graft.graph.HashGnn.userHashGnn(s, d)))
           .select(col("nodeId").as("node_id"), col("bit"))
@@ -434,10 +401,7 @@ object SparkEntry {
     "gds_filter_degree" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_filter_degree") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("coocGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "coocGraph")
         g.graphFilter("strongGraph", "coocGraph",
           relationshipFilter = "weight >= 3")
         g.degreeStream("strongGraph")
@@ -481,10 +445,7 @@ object SparkEntry {
     "gds_closeness_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_closeness_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("closenessGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "closenessGraph")
         // sourceNodes pins the kernel's fixed Seq(1, 2, 3, 4) sample
         // (user ids are 0-BASED on this corpus, so the lowest-4 default
         // would be {0,1,2,3}); sources are the only nonzero rows, so
@@ -503,10 +464,7 @@ object SparkEntry {
     "gds_randomwalk_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_randomwalk_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("walkGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "walkGraph")
         // walkLength counts NODES (GDS) = the kernel's 4 steps + 1;
         // posexplode unrolls the per-walk nodeIds array back to the
         // kernel's (walk_id, step, node_id) rows
@@ -520,10 +478,7 @@ object SparkEntry {
     "gds_spanningtree_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_spanningtree_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("mstGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "mstGraph")
         // MAXIMUM objective over the cooc weights = the mst_edges
         // forest (riding its session silver); the rooted rows
         // canonicalise back to undirected (src, dst, weight), and the
@@ -543,10 +498,7 @@ object SparkEntry {
     "gds_kspan_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       graft.Cache.cached(s, d, "gds_kspan_stream") {
-        val rq = graft.cypher.ReferenceQueries
-        val g = new graft.gds.GdsSession(rq.graph(s, d))
-        g.graphProjectCypher("kspanGraph",
-          rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+        val g = userSimilarityGds(s, d, "kspanGraph")
         // completes over the projection node set: active users with no
         // cooc edges become their own singleton cluster (the oracle's
         // COALESCE leg)
@@ -651,16 +603,15 @@ object SparkEntry {
       // distributed CC beyond. A spanning TREE is the worst-diameter
       // graph label propagation can see, so the forest side's
       // distributed leg runs maxIter=60 (~5 + log2(diameter) rounds)
-      val gate = graft.graph.Algorithms.driverGate(s, graft.graph.Algorithms.DriverGateDefault)
-      def components(edges: DataFrame, nEdges: Long, maxIter: Int): Long = {
-        val e = edges.select(col("src"), col("dst"))
-        if (gate > 0 && nEdges <= gate)
-          graft.graph.UnionFind.componentsLocal(
-              e.collect().map(r => (r.getLong(0), r.getLong(1))))
+      import graft.graph.Algorithms
+      val gate = Algorithms.driverGate(s, Algorithms.DriverGateDefault)
+      def components(edges: DataFrame, nEdges: Long, maxIter: Int): Long =
+        Algorithms.gatedInput(edges.select(col("src"), col("dst")), gate, Some(nEdges)) match {
+          case Right(rows) => graft.graph.UnionFind.componentsLocal(Algorithms.longPairs(rows))
             .map(_._2).distinct.length.toLong
-        else graft.graph.Algorithms.connectedComponents(e, maxIter)
-          .select(col("component")).distinct().count()
-      }
+          case Left(e) => Algorithms.connectedComponents(e, maxIter)
+            .select(col("component")).distinct().count()
+        }
       val nComp = components(cooc, cooc.count(), 20)
       val nForestEdges = f.count()
       val nForestComp = components(f, nForestEdges, 60)
@@ -1431,24 +1382,36 @@ object SparkEntry {
         source = 1L, target = 42L, k = 3, rounds = 6)
     }
 
+  /** A GDS session over the reference graph with the reference's user
+    * similarity projection stored as `graphName`: the setup the GDS
+    * entries share. */
+  private def userSimilarityGds(s: SparkSession, d: String,
+      graphName: String): graft.gds.GdsSession = {
+    val rq = graft.cypher.ReferenceQueries
+    val g = new graft.gds.GdsSession(rq.graph(s, d))
+    g.graphProjectCypher(graphName, rq.ProjectUserNodes, rq.ProjectUserSimilarityRels)
+    g
+  }
+
   private def splitViolations(labels: org.apache.spark.sql.DataFrame,
       labelCol: String,
       edges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
+    import graft.graph.Algorithms
     val l = labels.select(col("node_id"), col(labelCol).as("lab"))
     val intra = edges
       .join(l.select(col("node_id").as("src"), col("lab").as("sc")), Seq("src"))
       .join(l.select(col("node_id").as("dst"), col("lab").as("dc")), Seq("dst"))
       .filter(col("sc") === col("dc")).select(col("src"), col("dst"))
-      .localCheckpoint()
     val spark = labels.sparkSession
-    val gate = graft.graph.Algorithms.driverGate(spark, graft.graph.Algorithms.DriverGateDefault)
-    val comp =
-      if (gate > 0 && intra.count() <= gate) {
-        val es = intra.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val comp = Algorithms.gatedInput(intra,
+        Algorithms.driverGate(spark, Algorithms.DriverGateDefault)) match {
+      case Right(rows) =>
         import spark.implicits._
-        graft.graph.UnionFind.componentsLocal(es).toSeq.toDF("node_id", "component")
-      } else graft.graph.Algorithms.connectedComponents(intra, maxIter = 60)
+        graft.graph.UnionFind.componentsLocal(Algorithms.longPairs(rows)).toSeq
+          .toDF("node_id", "component")
+      case Left(intra) => Algorithms.connectedComponents(intra, maxIter = 60)
+    }
     l.join(comp, Seq("node_id"), "left")
       .select(col("lab"), coalesce(col("component"), col("node_id")).as("component"))
       .groupBy(col("lab"))

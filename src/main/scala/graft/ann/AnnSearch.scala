@@ -598,28 +598,26 @@ object AnnSearch {
   }
 
   private object LocalIndex {
-    /** One bounded collect both chooses the leg and loads the vectors: at
-      * most gate / Dim + 1 rows come back, and more than gate / Dim is over
-      * the gate. Ill-formed input (a null id or vector, a vector that is
+    /** One bounded collect (`Algorithms.driverData`) both chooses the leg
+      * and loads the vectors: more than gate / Dim rows is over the gate.
+      * Ill-formed input (a null id or vector, a vector that is
       * not Dim non-null floats, a repeated id) also goes distributed,
       * whose builders define what it yields; so does a table the declared
       * types cannot read, where the distributed leg reports any real
       * error. */
     def load(vectors: => DataFrame, gate: Long): Option[LocalIndex] = {
-      val cap = gate / Dim
-      val rows = try vectors.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      val rows = try Algorithms.driverData(Seq(vectors), gate / Dim).getOrElse(return None).head
         catch { case scala.util.control.NonFatal(_) => return None }
-      def wellFormed(r: org.apache.spark.sql.Row) =
+      def wellFormed(r: InternalRow) =
         !r.isNullAt(0) && !r.isNullAt(1) && {
-          val e = r.getSeq[Any](1)
-          e.length == Dim && !e.contains(null)
+          val e = r.getArray(1)
+          e.numElements == Dim && (0 until Dim).forall(!e.isNullAt(_))
         }
-      if (rows.length > cap || !rows.forall(wellFormed)) None
+      if (!rows.forall(wellFormed)) None
       else {
-        val ids = rows.map(_.getLong(0))
+        val ids = rows.map(_.getLong(0)).toArray
         if (ids.distinct.length != ids.length) None
-        else Some(new LocalIndex(ids,
-          rows.map(_.getSeq[Float](1).iterator.map(_.toDouble).toArray)))
+        else Some(new LocalIndex(ids, rows.map(_.getArray(1).toFloatArray.map(_.toDouble)).toArray))
       }
     }
   }

@@ -21,7 +21,7 @@ import graft.Tables
   *      neighbours (deterministic tie-break); the rest is noise (-1).
   *
   * The pair stage is size-adaptive like every candidate generator in
-  * this repo: below [[ExactPointsThresholdConf]] points it is the exact
+  * this repo: up to [[ExactPoints]] points it is the exact
   * all-pairs evaluation (a nested-loop broadcast join — n^2/2 codegen'd
   * float-array distance evaluations, the right plan for RAM-resident
   * point sets); above it, hyperplane-LSH banded candidates verified by
@@ -35,8 +35,9 @@ import graft.Tables
   */
 object Dbscan {
 
-  /** Point-count gate below which the pair stage is exact all-pairs. */
-  val ExactPointsThresholdConf = "graft.dbscan.exactPointsThreshold"
+  /** Points up to which the pair stage is exact all-pairs (read through
+    * `Algorithms.driverGate`). */
+  val ExactPoints = 20000L
 
   /** Squared eps-threshold literal. Kept as the DECIMAL SQUARE (not
     * `eps * eps`) so the Spark literal and the DuckDB oracle literal
@@ -64,10 +65,9 @@ object Dbscan {
   private[graft] def epsPairs(points: DataFrame, epsSq: Double): DataFrame = {
     val spark = points.sparkSession
     val pts = points.toDF("id", "vec").localCheckpoint()
-    val gate = spark.conf.getOption(ExactPointsThresholdConf)
-      .map(_.toLong).getOrElse(20000L)
+    val gate = graft.graph.Algorithms.driverGate(spark, ExactPoints)
     val candidates =
-      if (pts.count() <= gate) {
+      if (gate > 0 && pts.count() <= gate) {
         // exact all-pairs: broadcast one side, nested-loop the id
         // filter. The STREAM side must be spread first — a small point
         // set arrives as ONE parquet partition, and without the

@@ -2,7 +2,7 @@ package graft.ann
 
 import scala.collection.immutable.ArraySeq
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
@@ -88,8 +88,9 @@ object Lsh {
       .join(base.select(col("id").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))
   }
 
-  /** Conf key: max rows for the exact all-pairs near-dup leg. */
-  val ExactPairsThresholdConf = "graft.lsh.exactPairsThreshold"
+  /** Rows up to which [[nearDupPairs]] scores exact all-pairs (read
+    * through `Algorithms.driverGate`). */
+  val ExactPairsRows = 20000L
 
   /** Near-duplicate pairs by cosine threshold — SIZE-ADAPTIVE (the
     * [[graft.ann.Dbscan]] idiom): under the gate the candidates come
@@ -104,10 +105,9 @@ object Lsh {
       minCosine: Double, bands: Int = 6, bitsPerBand: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val pts = df.select(col(idCol).as("id"), col(vecCol).as("vec")).localCheckpoint()
-    val gate = spark.conf.getOption(ExactPairsThresholdConf)
-      .map(_.toLong).getOrElse(20000L)
+    val gate = Algorithms.driverGate(spark, ExactPairsRows)
     val candidates =
-      if (pts.count() <= gate) {
+      if (gate > 0 && pts.count() <= gate) {
         // spread the stream side first — a small table arrives as one
         // parquet partition and would nested-loop on a single core
         val fan = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -166,19 +166,19 @@ object Lsh {
     }
     if (gate <= 0 || dim < 1 || !Algorithms.integral(id.dataType) || floatVec.isEmpty)
       return None
-    val rows = Algorithms.driverRows(in, gate / dim)
-    def wellFormed(r: Row) = !r.isNullAt(0) && !r.isNullAt(1) && {
-      val v = r.getSeq[Any](1)
-      v.length == dim && !v.contains(null)
+    val rows = Algorithms.driverData(Seq(in), gate / dim).getOrElse(return None).head
+    def wellFormed(r: InternalRow) = !r.isNullAt(0) && !r.isNullAt(1) && {
+      val v = r.getArray(1)
+      v.numElements == dim && (0 until dim).forall(!v.isNullAt(_))
     }
-    if (rows.length.toLong * dim > gate || !rows.forall(wellFormed)) return None
+    if (!rows.forall(wellFormed)) return None
     // vector indices in id order, so index order is the (id_a < id_b) order
-    val byId = rows.sortBy(r => num(r.get(0)))
-    val ids = byId.map(r => num(r.get(0)))
+    def idOf(r: InternalRow) = r.get(0, id.dataType)
+    val byId = rows.sortBy(r => num(idOf(r))).toArray
+    val ids = byId.map(r => num(idOf(r)))
     if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
-    val vecs = byId.map(r =>
-      if (floatVec.get) r.getSeq[Float](1).iterator.map(_.toDouble).toArray
-      else r.getSeq[Double](1).toArray)
+    val vecs = byId.map { r =>
+      if (floatVec.get) r.getArray(1).toFloatArray.map(_.toDouble) else r.getArray(1).toDoubleArray }
 
     val planes = Array.tabulate(bands * bitsPerBand)(hyperplane(_, dim, seed))
     def bucket(v: Array[Double], b: Int): Long = {
@@ -203,7 +203,7 @@ object Lsh {
       .toArray.sorted.distinct
     val out = pairs.map { p =>
       val (a, b) = ((p / n).toInt, (p % n).toInt)
-      InternalRow(byId(a).get(0), byId(b).get(0), CosineSim.local(vecs(a), vecs(b)))
+      InternalRow(idOf(byId(a)), idOf(byId(b)), CosineSim.local(vecs(a), vecs(b)))
     }
     Some(GraftBridge.localFrame(spark, StructType(Seq(
         StructField("id_a", id.dataType, id.nullable),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ann.Lsh
+import graft.graph.Algorithms
 
 /** Near-duplicate detection suite over the `documents` table — the
   * standard large-corpus dedup ladder: exact hash (in
@@ -277,14 +278,14 @@ object Dedup {
     * the exact-oracled pair stage with the min-label CC fixpoint, so
     * the whole path stays exactly oracle-checkable via a recursive-CTE
     * closure. */
-  /** Pair-count threshold below which [[nearDupClusters]] solves the
-    * closure with driver-side union-find instead of the distributed
-    * min-label fixpoint. Near-dup pair graphs are SPARSE (pairs ≪
-    * corpus): when the verified pair set fits on the driver, a
-    * 20-round distributed fixpoint is pure scheduling overhead
-    * (measured ~8 s vs milliseconds at sf0.1). Above the threshold —
-    * a pathological corpus or 100 TB scale — the DataFrame CC runs. */
-  val ClustersLocalThresholdConf = "graft.dedup.clusters.localThreshold"
+  /** Pairs up to which [[nearDupClusters]] solves the closure with
+    * driver-side union-find instead of the distributed min-label
+    * fixpoint (read through `Algorithms.driverGate`). Near-dup pair
+    * graphs are SPARSE (pairs ≪ corpus): when the verified pair set fits
+    * on the driver, a 20-round distributed fixpoint is pure scheduling
+    * overhead (measured ~8 s vs milliseconds at sf0.1). Above it — a
+    * pathological corpus or 100 TB scale — the DataFrame CC runs. */
+  val ClosurePairs = 1000000L
 
   def nearDupClusters(spark: SparkSession, dir: String,
       minJaccard: Double = 0.5): DataFrame =
@@ -307,28 +308,24 @@ object Dedup {
   }
 
   /** Component closure over a verified pair graph, size-adaptive (see
-    * [[ClustersLocalThresholdConf]]); every doc in `docs` gets a
-    * cluster (singletons keep their own id). */
+    * [[ClosurePairs]]); every doc in `docs` gets a cluster (singletons
+    * keep their own id). */
   private[graft] def clusterClosure(spark: SparkSession, pairsIn: DataFrame,
       docs: DataFrame): DataFrame = {
-    val threshold = spark.conf.getOption(ClustersLocalThresholdConf)
-      .map(_.toLong).getOrElse(1000000L)
-    // materialize once: the threshold probe (count) and the closure
-    // (collect / CC) both read the pair set, and on the induced-subset
-    // path the semi-joins above it are NOT session-cached
-    val pairs = pairsIn.localCheckpoint()
-    val cc =
-      if (pairs.count() <= threshold) {
-        val es = pairs.select(col("id_a"), col("id_b")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
+    // materialised once: the gate's count and the closure (collect / CC)
+    // both read the pair set, and on the induced-subset path the
+    // semi-joins above it are NOT session-cached
+    val cc = Algorithms.gatedInput(pairsIn.select(col("id_a"), col("id_b")),
+        Algorithms.driverGate(spark, ClosurePairs)) match {
+      case Right(rows) =>
         import spark.implicits._
-        graft.graph.UnionFind.componentsLocal(es).toSeq.toDF("node_id", "component")
-      } else {
-        // connectedComponents bidirects + distincts internally — pass
-        // the one-direction pairs straight through
-        graft.graph.Algorithms.connectedComponents(
-          pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      }
+        graft.graph.UnionFind.componentsLocal(Algorithms.longPairs(rows)).toSeq
+          .toDF("node_id", "component")
+      // connectedComponents bidirects + distincts internally — pass the
+      // one-direction pairs straight through
+      case Left(pairs) => Algorithms.connectedComponents(
+        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+    }
     docs
       .join(cc.withColumnRenamed("node_id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("cluster_id"))

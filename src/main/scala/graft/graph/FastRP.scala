@@ -171,18 +171,20 @@ object FastRP {
     val id = in.schema("src")
     if (gate <= 0 || dim < 1 || dim > 4096 || !Algorithms.integral(id.dataType) ||
         !Algorithms.integral(in.schema("dst").dataType)) return None
-    val rows = Algorithms.driverRows(in, gate)
-    if (rows.length > gate || rows.exists(_.anyNull)) return None
+    val rows = Algorithms.driverData(Seq(in), gate).getOrElse(return None).head.toArray
+    if (rows.exists(_.anyNull)) return None
     def num(v: Any): Long = v.asInstanceOf[Number].longValue
     // nodes are the distinct srcs in first-seen order, as in the Spark leg
     val index = scala.collection.mutable.LongMap.empty[Int]
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
     val src = rows.map { r =>
-      index.getOrElseUpdate(num(r.get(0)), { ids += r.get(0); ids.length - 1 })
+      val v = r.get(0, id.dataType)
+      index.getOrElseUpdate(num(v), { ids += v; ids.length - 1 })
     }
     val n = ids.length
     if (n.toLong * dim > gate) return None
-    val dst = rows.map(r => index.getOrElse(num(r.get(1)), -1))
+    val dstType = in.schema("dst").dataType
+    val dst = rows.map(r => index.getOrElse(num(r.get(1, dstType)), -1))
     val w = rows.map(_.getDouble(2))
     val vk = graft.plans.VecKernels
 

@@ -41,8 +41,8 @@ import org.apache.spark.sql.types._
   * SQL oracle would flag it loudly. Candidate iteration order is the
   * CSR's dst-ascending order — order only matters on those ties.
   *
-  * Scale: gated by `graft.node2vec.adjBroadcastEdges` (the caller's
-  * existing gate) — above it the pair-join column form runs, which is
+  * Scale: gated by `Algorithms.Node2VecAdjEdges` through
+  * `Algorithms.driverGate` (the caller's gate) — above it the pair-join column form runs, which is
   * the 100 TB-safe shape. */
 final class N2vCsr(val srcs: Array[Long], val offs: Array[Int],
     val dsts: Array[Long], val ws: Array[Double]) extends Serializable {
@@ -94,7 +94,7 @@ object Node2VecStep {
 
   /** Collect a both-directions (src, dst, weight) frame into a CSR
     * with dst-sorted slices, and broadcast it. Caller gates the size
-    * (`graft.node2vec.adjBroadcastEdges`). */
+    * (`Algorithms.Node2VecAdjEdges`). */
   def buildCsr(bidir: DataFrame): Broadcast[N2vCsr] = {
     import org.apache.spark.sql.functions.col
     // sort DISTRIBUTED (a driver-side boxed-tuple sort of the collected

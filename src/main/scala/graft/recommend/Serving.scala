@@ -7,8 +7,8 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.StructType
@@ -25,10 +25,11 @@ import graft.plans.LocalPlans
   * Spark job and no parquet read per lookup.
   *
   * Snapshot leg (table rows ≤ `graft.driver.localThreshold`, the shared
-  * driver-leg gate): the first lookup against a table collects it once,
-  * globally sorted by (user_id, the lookup's own sort keys) — Spark's
-  * own sort, so null/NaN/tie order is the bucketed leg's — into a
-  * per-user map of rows. Each lookup returns one user's rows as a local
+  * driver-leg gate): the first lookup against a table reads it by one
+  * bounded collect and sorts it on the driver by (user_id, the lookup's
+  * own sort keys) through `graft.plans.LocalPlans` — Spark's own sort,
+  * so null/NaN/tie order is the bucketed leg's — into a per-user map of
+  * rows. Each lookup returns one user's rows as a local
   * relation with the table's schema.
   *
   * Frame memo (snapshot leg only): a snapshot keeps the frame it built
@@ -194,31 +195,42 @@ object Serving {
   }
 
   /** A driver-local, read-only copy of one serving table as created at
-    * `createTime`. The lazy vals are single-flight: concurrent first
-    * lookups wait on the one count and the one build, and a failed
-    * build is retried by the next lookup. */
+    * `createTime`, loaded under the gate of the first lookup that reads
+    * it. The load is single-flight: concurrent first lookups wait on the
+    * one load, and a failed load is retried by the next lookup. */
   private final class Snapshot(session: SparkSession, table: String,
       val createTime: Long, payload: Seq[String], order: Seq[Column]) {
-    /** The gate's measure: the table's row count, counted once. */
-    lazy val rows: Long = session.table(table).count()
+    lazy val schema: StructType = session.table(table).select(payload.map(col): _*).schema
 
-    // one task sorts the whole table (it is under the driver gate):
-    // a global sort over a single partition plans no range Exchange
-    private lazy val sorted = session.table(table)
-      .filter(col("user_id").isNotNull)
-      .coalesce(1)
-      .orderBy(col("user_id") +: order: _*)
-      .select(col("user_id").cast("long") +: payload.map(col): _*)
+    /** Each user's rows in lookup order, and the table's row count; None
+      * when the table held more rows than the load's gate; null before
+      * the load. */
+    @volatile private var held: Option[(Map[Long, Array[InternalRow]], Long)] = _
 
-    lazy val schema: StructType = StructType(sorted.schema.fields.tail)
-
-    lazy val byUser: Map[Long, Array[InternalRow]] = {
-      snapshotBuilds.incrementAndGet()
-      val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
-      // groupBy keeps each user's rows in the collected (sorted) order
-      sorted.collect().groupBy(_.getLong(0)).map { case (u, rs) =>
-        u -> rs.map(r => toInternal(Row.fromSeq(r.toSeq.tail)).asInstanceOf[InternalRow])
+    /** One bounded collect reads the table, and the sort runs on the
+      * driver through `LocalPlans`: Spark's own sort, so null, NaN and
+      * tie order are the bucketed leg's. */
+    private def load(gate: Long): Option[(Map[Long, Array[InternalRow]], Long)] = {
+      val t = session.table(table)
+      Algorithms.driverData(Seq(t), gate).map { case Seq(rows) =>
+        snapshotBuilds.incrementAndGet()
+        val sorted = GraftBridge.localFrame(session, t.schema, rows)
+          .filter(col("user_id").isNotNull)
+          .orderBy(col("user_id") +: order: _*)
+          .select(col("user_id").cast("long"), struct(payload.map(col): _*))
+        // groupBy keeps each user's rows in the sorted order
+        val byUser = GraftBridge.collectInternal(sorted).groupBy(_.getLong(0)).map {
+          case (u, rs) => u -> rs.map(_.getStruct(1, payload.length))
+        }
+        (byUser, rows.size.toLong)
       }
+    }
+
+    /** Whether the snapshot answers under a positive `gate`: the table
+      * was loaded, and its rows are within `gate`. */
+    def serves(gate: Long): Boolean = {
+      if (held == null) synchronized { if (held == null) held = load(gate) }
+      held.exists(_._2 <= gate)
     }
 
     /** Built frames by `sessionId|user`. */
@@ -227,7 +239,7 @@ object Serving {
     private def frame(spark: SparkSession, user: Long): DataFrame = {
       frameBuilds.incrementAndGet()
       GraftBridge.localFrame(spark, schema,
-        ArraySeq.unsafeWrapArray(byUser.getOrElse(user, Array.empty[InternalRow])))
+        ArraySeq.unsafeWrapArray(held.get._1.getOrElse(user, Array.empty[InternalRow])))
     }
 
     /** One user's rows in lookup order: the frame this snapshot built for
@@ -266,7 +278,7 @@ object Serving {
           new Snapshot(state.session, table, created, payload, order)
         })
     val gate = Algorithms.driverGate(spark, Algorithms.DriverGateDefault)
-    if (gate > 0 && snapshot.rows <= gate) snapshot.lookup(spark, user)
+    if (gate > 0 && snapshot.serves(gate)) snapshot.lookup(spark, user)
     else state.session.table(table)
       .filter(col("user_id") === user)
       .select(payload.map(col): _*)

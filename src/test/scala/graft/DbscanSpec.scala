@@ -43,11 +43,17 @@ class DbscanSpec extends AnyFunSuite {
     val points = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val exact = Dbscan.dbscanFrom(points).collect().map(_.toSeq)
-    spark.conf.set(Dbscan.ExactPointsThresholdConf, "0")
-    try {
-      val viaLsh = Dbscan.dbscanFrom(points).collect().map(_.toSeq)
-      assert(viaLsh.toSeq == exact.toSeq)
-    } finally spark.conf.unset(Dbscan.ExactPointsThresholdConf)
+    // the same points in a session whose driver gate is 0: LSH-banded
+    // candidates, and the distributed closure
+    val gateZero = spark.newSession()
+    gateZero.conf.set("graft.driver.localThreshold", "0")
+    // the kernels register their functions on the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(gateZero)
+    val viaLsh = try Dbscan.dbscanFrom(org.apache.spark.sql.graftbridge.GraftBridge.ofRows(
+        gateZero, org.apache.spark.sql.graftbridge.GraftBridge.logicalPlan(points)))
+      .collect().map(_.toSeq)
+    finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    assert(viaLsh.toSeq == exact.toSeq)
   }
 
   test("nnDescent: planted clusters converge to the within-cluster KNN graph") {

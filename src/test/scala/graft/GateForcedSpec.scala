@@ -2,45 +2,40 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r13 (VERDICT #6): every size-gated driver leg / broadcast pin must
-  * have a LIVE distributed fallback that returns hash-identical rows.
-  * This suite re-runs the gate-dependent entries at sf0.001 in a fresh
-  * session with every gate forced to the at-scale shape:
+/** Every size-gated driver leg and broadcast pin must have a LIVE
+  * distributed fallback that returns row-identical output. This suite
+  * re-runs the gate-dependent entries at sf0.001 in a fresh session with
+  * every gate forced to the at-scale shape:
   *
   *   graft.iter.broadcastBytes=0        (all loop-state broadcast pins,
   *                                       oriented-adj pin, sllpa memArr)
-  *   graft.driver.localThreshold=0      (UnionFind CC, driver Tarjan SCC,
-  *                                       BZ core decomposition,
-  *                                       JP coloring, yens Bellman–Ford,
-  *                                       Borůvka contraction, the
-  *                                       serving snapshot, the
-  *                                       mst_invariants CC counts, the
-  *                                       kspan/leiden split checks'
-  *                                       CC, the driver-built ANN
-  *                                       IVF/PQ index, the driver
-  *                                       FastRP states, LSH scored
-  *                                       pairs and KNN top-k, the
-  *                                       ratings silver held on the
-  *                                       driver, whole Louvain on the
-  *                                       driver)
-  *   graft.dedup.clusters.localThreshold=0 (closure UF)
-  *   graft.node2vec.adjBroadcastEdges=0 (CSR/adjacency broadcast draw)
-  *   graft.dbscan.exactPointsThreshold=0 (LSH-banded eps pairs)
-  *   graft.lsh.exactPairsThreshold=0     (banded candidate generation)
+  *   graft.driver.localThreshold=0      (every leg read through
+  *                                       `Algorithms.driverGate`: UnionFind
+  *                                       CC, driver Tarjan SCC, BZ core
+  *                                       decomposition, JP coloring, yens
+  *                                       Bellman–Ford, Kruskal and the
+  *                                       Borůvka contraction, the serving
+  *                                       snapshot, the mst_invariants CC
+  *                                       counts, the kspan/leiden split
+  *                                       checks' CC, the driver-built ANN
+  *                                       IVF/PQ index, the driver FastRP
+  *                                       states, LSH scored pairs and KNN
+  *                                       top-k, the ratings silver held on
+  *                                       the driver, whole Louvain on the
+  *                                       driver, the dedup closure UF, the
+  *                                       node2vec CSR/adjacency broadcast,
+  *                                       the dbscan exact eps pairs and the
+  *                                       LSH near-dup exact pairs)
   *
   * and asserts row-identical output against the default-gate run. */
-class R13GateForcedSpec extends AnyFunSuite {
+class GateForcedSpec extends AnyFunSuite {
   import TestSpark._
 
   private val sfDir = "/root/testdata/sf0.001"
 
   private val ForcedConfs = Seq(
     "graft.iter.broadcastBytes" -> "0",
-    "graft.driver.localThreshold" -> "0",
-    "graft.dedup.clusters.localThreshold" -> "0",
-    "graft.node2vec.adjBroadcastEdges" -> "0",
-    "graft.dbscan.exactPointsThreshold" -> "0",
-    "graft.lsh.exactPairsThreshold" -> "0")
+    "graft.driver.localThreshold" -> "0")
 
   private val Entries = Seq(
     "connected_components", "scc_components", "kcore_decomposition",
@@ -55,7 +50,8 @@ class R13GateForcedSpec extends AnyFunSuite {
     "ivf_invariants", "pq_invariants", "ivfpq_invariants",
     "fastrp_norms", "knn_similar_edges", "knn_similar_edges_ref",
     "knn_edges_invariants", "gds_knn_write", "recommend_knn_embedding",
-    "gds_louvain_write", "gds_leiden_write", "louvain_invariants")
+    "gds_louvain_write", "gds_leiden_write", "louvain_invariants",
+    "dedup_embedding")
 
   private def runAll(confs: Seq[(String, String)]): Map[String, Seq[String]] = {
     val s = spark.newSession()

@@ -12,6 +12,19 @@ class NewOpsSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
+  /** A session whose driver gate is 0: every size-adaptive kernel takes
+    * its distributed leg there. */
+  private lazy val gateZero = {
+    val s = spark.newSession()
+    s.conf.set("graft.driver.localThreshold", "0")
+    s
+  }
+
+  /** `df`'s plan as a frame of the gate-0 session. */
+  private def forced(df: org.apache.spark.sql.DataFrame) =
+    org.apache.spark.sql.graftbridge.GraftBridge.ofRows(gateZero,
+      org.apache.spark.sql.graftbridge.GraftBridge.logicalPlan(df))
+
   private def bidir(pairs: Seq[(Long, Long)]) =
     (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
 
@@ -46,13 +59,13 @@ class NewOpsSpec extends AnyFunSuite {
   test("scc: chain of cycles against the peel direction needs multiple outer rounds") {
     // 5⇄6 → 3⇄4 → 1⇄2: every node has in+out degree (trim removes
     // nothing), one coloring root per round → three peel rounds.
-    // localThreshold = 0 forces the DISTRIBUTED peel (the default would
+    // the gate-0 session forces the DISTRIBUTED peel (the default would
     // route this fixture to driver Tarjan); the next test proves the
     // two legs agree row-for-row.
     val edges = Seq((5L, 6L), (6L, 5L), (6L, 3L), (3L, 4L), (4L, 3L),
       (4L, 1L), (1L, 2L), (2L, 1L)).toDF("src", "dst")
     val got = Algorithms
-      .stronglyConnectedComponents(edges, localThreshold = 0L).collect()
+      .stronglyConnectedComponents(forced(edges)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 5L))
   }
@@ -75,7 +88,7 @@ class NewOpsSpec extends AnyFunSuite {
       fwd.unionByName(bwd)
     }
     val dist = Algorithms
-      .stronglyConnectedComponents(edges, localThreshold = 0L).collect()
+      .stronglyConnectedComponents(forced(edges)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == dist)
   }
@@ -975,7 +988,7 @@ class NewOpsSpec extends AnyFunSuite {
       if i != j } yield (i, j)).distinct.toDF("src", "dst")
     val fast = Algorithms.k1Coloring(edges).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val dist = Algorithms.k1Coloring(edges, driverLimit = 0L).collect()
+    val dist = Algorithms.k1Coloring(forced(edges)).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(fast == dist)
   }
@@ -1258,9 +1271,9 @@ class NewOpsSpec extends AnyFunSuite {
     // the uncapped distributed run and the driver simulation.
     val k12 = (for { a <- 1L to 12L; b <- 1L to 12L if a < b } yield (a, b))
       .toDF("src", "dst")
-    val capped = Algorithms.k1Coloring(k12, maxRounds = 3, driverLimit = 0L)
+    val capped = Algorithms.k1Coloring(forced(k12), maxRounds = 3)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val uncapped = Algorithms.k1Coloring(k12, driverLimit = 0L)
+    val uncapped = Algorithms.k1Coloring(forced(k12))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val driver = Algorithms.k1Coloring(k12)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -1318,8 +1331,8 @@ class NewOpsSpec extends AnyFunSuite {
       (0L, Seq(1L, 2L, 4L), 2.0, Seq(0.0, 1.0, 2.0)),
       (1L, Seq(1L, 3L, 4L), 2.5, Seq(0.0, 1.0, 2.5)),
       (2L, Seq(1L, 2L, 3L, 4L), 3.0, Seq(0.0, 1.0, 1.5, 3.0))), s"got $got")
-    // distributed leg (driverLimit = 0): same paths, same costs
-    val dist = pathsOf(Algorithms.yensPaths(edges, 1L, 4L, k = 3, driverLimit = 0L))
+    // distributed leg (gate 0): same paths, same costs
+    val dist = pathsOf(Algorithms.yensPaths(forced(edges), 1L, 4L, k = 3))
     assert(dist == got, s"legs disagree: $dist vs $got")
     // k beyond the loopless supply truncates instead of looping
     val all = pathsOf(Algorithms.yensPaths(edges, 1L, 4L, k = 10))
@@ -1336,7 +1349,7 @@ class NewOpsSpec extends AnyFunSuite {
     val edges = Seq((1L, 2L, third), (2L, 3L, third), (3L, 4L, third), (2L, 5L, 1.0),
       (5L, 4L, third), (3L, 5L, 1.0), (1L, 5L, 1.5)).toDF("src", "dst", "len")
     val driver = Algorithms.yensPaths(edges, 1L, 4L, k = 4).collect().toSeq
-    val dist = Algorithms.yensPaths(edges, 1L, 4L, k = 4, driverLimit = 0L).collect().toSeq
+    val dist = Algorithms.yensPaths(forced(edges), 1L, 4L, k = 4).collect().toSeq
     assert(dist == driver, s"legs disagree: $dist vs $driver")
     val costs = driver.map(r => r.getLong(0) -> r.getDouble(3)).distinct.sortBy(_._1).map(_._2)
     assert(costs == Seq(1.0, 1.666667, 1.833333, 2.0), s"path costs $costs")

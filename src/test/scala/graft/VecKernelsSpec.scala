@@ -88,13 +88,19 @@ class VecKernelsSpec extends AnyFunSuite {
   test("weighted walk corpus: native step draw ≡ the ES-clock column form") {
     val edges = graph.RatingsGraph.cooccurrenceEdges(spark, sf)
       .select(col("u1").as("src"), col("u2").as("dst"), col("weight"))
-    def corpus() = graph.Algorithms.node2vecWalkCorpus(edges,
+    def corpus(e: org.apache.spark.sql.DataFrame) = graph.Algorithms.node2vecWalkCorpus(e,
       walksPerNode = 2, steps = 4, symmetric = true, weighted = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val native = corpus() // default gate → Node2VecStep kernel
-    spark.conf.set("graft.node2vec.adjBroadcastEdges", "0")
-    val column = try corpus() // gate 0 → pair-join + min_by column form
-    finally spark.conf.unset("graft.node2vec.adjBroadcastEdges")
+    val native = corpus(edges) // default gate → Node2VecStep kernel
+    // the same edges in a session whose driver gate is 0 → pair-join +
+    // min_by column form
+    val gateZero = spark.newSession()
+    gateZero.conf.set("graft.driver.localThreshold", "0")
+    // the kernels register their functions on the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(gateZero)
+    val column = try corpus(org.apache.spark.sql.graftbridge.GraftBridge.ofRows(gateZero,
+      org.apache.spark.sql.graftbridge.GraftBridge.logicalPlan(edges)))
+    finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
     assert(native == column,
       s"corpora diverge: only-native=${(native -- column).take(5)} " +
         s"only-column=${(column -- native).take(5)}")
